@@ -1,7 +1,7 @@
 package graft
 
 import graft.llm.{Dedup, TextAnalysis}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** End-to-end corpus-curation job — the LLM-pipeline analogue of
@@ -35,51 +35,72 @@ object CurationJob {
     val kept = TextAnalysis.withStats(reps, text)
       .filter(col("quality") >= minQuality && col("pred_lang") === lang)
       .select(col(id), col(text))
-    val clean = evalSet match {
-      case Some(ev) =>
-        kept.join(Dedup.decontaminate(kept, ev, text, id), Seq(id))
-      case None => kept
-    }
+    val clean = evalSet.fold(kept)(ev =>
+      kept.join(Dedup.contaminatedIds(kept, ev, text, id), Seq(id),
+        "left_anti"))
     TextAnalysis.chunkDocuments(clean, text, id, chunkSize, overlap)
   }
 
   /** Per-gate attrition audit — the funnel a data-curation run
     * publishes: for each pipeline stage, how many documents and
     * tokens survive. Stages: raw → exact_dedup → quality_gate →
-    * lang_gate → decontaminated (quality and language are applied
-    * sequentially here so each gate's own cost is visible; their
-    * composition equals [[curate]]'s combined filter). Each stage is
-    * ONE count/sum aggregate over the progressively gated frame —
-    * the union of five 1-row frames costs five scans of shrinking
-    * data, the audit shape; at 100 TB you would cache `reps` once
-    * and the remaining stages are cheap gated re-scans of it.
+    * lang_gate → decontaminated; stage 5's survivors are the documents
+    * [[curate]] keeps.
+    *
+    * ONE conditional aggregate over the exact-dedup frame: each text
+    * group carries its duplicate count `__n`, so the raw stage is
+    * `sum(__n)` docs and `sum(__n · tokens)` tokens — exact, since the
+    * same text always has the same token count — and stages 2-5 are
+    * predicate prefixes over that frame (true, quality, quality ∧
+    * lang, and ∧ not contaminated). Contaminated groups are flagged by
+    * a left join against [[Dedup.contaminatedIds]] of the gated ones,
+    * so ids are assumed unique and non-null.
     */
   def funnel(docs: DataFrame, text: String, id: String,
       minQuality: Double = 0.5, lang: String = "en",
       evalSet: Option[DataFrame] = None): DataFrame = {
-    def stage(ord: Int, name: String, df: DataFrame): DataFrame =
-      df.agg(count(lit(1)).as("n_docs"),
-          coalesce(sum(TextAnalysis.tokenCountExpr(text)
-            .cast("long")), lit(0L)).as("n_tokens"))
-        .select(lit(ord.toLong).as("stage_ord"),
-          lit(name).as("stage"), col("n_docs"), col("n_tokens"))
     val reps = docs.groupBy(col(text))
-      .agg(min(col(id)).as(id))
-      .select(col(id), col(text))
+      .agg(min(col(id)).as(id), count(lit(1)).as("__n"))
     val st = TextAnalysis.withStats(reps, text)
-    val q = st.filter(col("quality") >= minQuality)
-    val l = q.filter(col("pred_lang") === lang)
-    val kept = l.select(col(id), col(text))
-    val clean = evalSet match {
+    val quality = col("quality") >= minQuality
+    val kept = quality && col("pred_lang") === lang
+    val (g, clean) = evalSet match {
       case Some(ev) =>
-        kept.join(Dedup.decontaminate(kept, ev, text, id), Seq(id))
-      case None => kept
+        (st.join(Dedup.contaminatedIds(st.filter(kept), ev, text, id)
+            .withColumn("__c", lit(true)), Seq(id), "left"),
+          kept && col("__c").isNull)
+      case None => (st, kept)
     }
-    stage(1, "raw", docs)
-      .unionByName(stage(2, "exact_dedup", reps))
-      .unionByName(stage(3, "quality_gate", q))
-      .unionByName(stage(4, "lang_gate", l))
-      .unionByName(stage(5, "decontaminated", clean))
+    stageCounts(
+      g.withColumn("__nt", TextAnalysis.tokenCountExpr(text).cast("long")),
+      Seq(
+        ("raw", lit(true), col("__n")),
+        ("exact_dedup", lit(true), lit(1L)),
+        ("quality_gate", quality, lit(1L)),
+        ("lang_gate", kept, lit(1L)),
+        ("decontaminated", clean, lit(1L))))
+  }
+
+  /** A funnel's rows from ONE aggregate over `g`: stage i (1-based,
+    * in order) counts `weight` docs and `weight · __nt` tokens over
+    * the rows its predicate holds on, unfolded into (stage_ord, stage,
+    * n_docs, n_tokens) rows — one pass over `g` however many stages.
+    */
+  private def stageCounts(g: DataFrame,
+      stages: Seq[(String, Column, Column)]): DataFrame = {
+    val indexed = stages.zipWithIndex
+    val aggCols = indexed.flatMap { case ((_, p, w), i) => Seq(
+      coalesce(sum(when(p, w)), lit(0L)).as(s"__d$i"),
+      coalesce(sum(when(p, w * col("__nt"))), lit(0L)).as(s"__t$i")) }
+    val rows = indexed.map { case ((name, _, _), i) =>
+      s"named_struct('stage_ord', ${i + 1}L, 'stage', '$name', " +
+        s"'n_docs', __d$i, 'n_tokens', __t$i)" }
+    g.agg(aggCols.head, aggCols.tail: _*)
+      .select(explode(expr(rows.mkString("array(", ", ", ")"))).as("__s"))
+      .select(col("__s.stage_ord").as("stage_ord"),
+        col("__s.stage").as("stage"),
+        col("__s.n_docs").as("n_docs"),
+        col("__s.n_tokens").as("n_tokens"))
   }
 
   /** Arithmetic-packed (doc, chunk) composite id. The packing is only
@@ -107,7 +128,7 @@ object CurationJob {
     *   - PII: [[TextAnalysis.piiCountsExpr]] regex counts and
     *     `pii_gate` (any email/IP/phone hit — a release ships the
     *     REDACTED text or not at all);
-    *   - contamination: [[Dedup.decontaminate]]'s word-8-gram
+    *   - contamination: [[Dedup.contaminatedIds]]' word-8-gram
     *     overlap against the evaluation corpus (`contaminated`);
     *   - metadata privacy: [[TextAnalysis.kAnonymize]] over the
     *     document's quasi-identifier attributes (`is_anonymous` — a
@@ -119,7 +140,7 @@ object CurationJob {
     * contaminated, is_anonymous, released).
     *
     * Scale shape: the license and PII gates are row-local codegen
-    * scans; decontamination is the gram semi-join pair; k-anonymity
+    * scans; decontamination is the gram semi-join; k-anonymity
     * is the bounded level ladder; the verdict join is four
     * equi-joins on the id key (one shuffle each, or zero with a
     * bucketed id layout). Nothing pairwise, nothing driver-side.
@@ -157,11 +178,11 @@ object CurationJob {
              |ELSE __pg END""".stripMargin).as("pii_gate")): _*)
     val clean = evalSet match {
       case Some(ev) =>
-        val kept = Dedup.decontaminate(docs, ev, text, id)
-          .withColumn("__kept", lit(true))
-        docs.select(col(id)).join(kept, Seq(id), "left")
+        docs.select(col(id))
+          .join(Dedup.contaminatedIds(docs, ev, text, id)
+            .withColumn("__c", lit(true)), Seq(id), "left")
           .select(col(id),
-            coalesce(!col("__kept"), lit(true)).as("contaminated"))
+            coalesce(col("__c"), lit(false)).as("contaminated"))
       case None =>
         docs.select(col(id), lit(false).as("contaminated"))
     }
@@ -179,10 +200,9 @@ object CurationJob {
   /** Per-gate attrition over [[releaseGate]]'s verdicts — the release
     * audit's funnel report: docs and tokens surviving raw →
     * license_ok → pii_clean → decontaminated → anonymous, the gates
-    * applied SEQUENTIALLY in that order so each gate's own cost is
-    * visible; stage 5's survivors are exactly the `released = true`
-    * rows (spec-pinned). Same audit shape as [[funnel]]: five
-    * aggregates over one progressively gated frame.
+    * applied in that order; stage 5's survivors are exactly the
+    * `released = true` rows (spec-pinned). Same one-aggregate shape
+    * as [[funnel]].
     */
   def releaseFunnel(docs: DataFrame, text: String, id: String,
       markers: Seq[(String, String)],
@@ -194,32 +214,18 @@ object CurationJob {
       .join(docs.select(col(id),
         TextAnalysis.tokenCountExpr(text).cast("long").as("__nt")),
         Seq(id))
-    // ONE conditional-aggregate pass (round-20 self-review): unlike
-    // [[funnel]], whose stages genuinely reshape the frame, stages
-    // 2-5 here are pure predicate prefixes over g's OWN boolean
-    // columns — five separate aggregates would re-execute the whole
-    // gate DAG (AC scan, gram semi-join, ladder) five times. The
-    // five funnel rows unfold from the single aggregated row.
-    val gates = Seq(
-      (1, "raw", lit(true)),
-      (2, "license_ok", !col("copyleft_gate")),
-      (3, "pii_clean", !col("copyleft_gate") && !col("pii_gate")),
-      (4, "decontaminated", !col("copyleft_gate") &&
-        !col("pii_gate") && !col("contaminated")),
-      (5, "anonymous", !col("copyleft_gate") && !col("pii_gate") &&
-        !col("contaminated") && col("is_anonymous")))
-    val aggCols = gates.flatMap { case (i, _, p) => Seq(
-      coalesce(sum(when(p, 1L)), lit(0L)).as(s"__d$i"),
-      coalesce(sum(when(p, col("__nt"))), lit(0L)).as(s"__t$i")) }
-    val agg = g.agg(aggCols.head, aggCols.tail: _*)
-    agg.select(explode(expr(gates.map { case (i, name, _) =>
-        s"named_struct('stage_ord', ${i}L, 'stage', '$name', " +
-          s"'n_docs', __d$i, 'n_tokens', __t$i)"
-      }.mkString("array(", ", ", ")"))).as("__s"))
-      .select(col("__s.stage_ord").as("stage_ord"),
-        col("__s.stage").as("stage"),
-        col("__s.n_docs").as("n_docs"),
-        col("__s.n_tokens").as("n_tokens"))
+    // stages 2-5 are predicate prefixes over g's own boolean columns:
+    // one aggregate, so the gate DAG (AC scan, gram semi-join, ladder)
+    // runs once, not once per stage
+    val one = lit(1L)
+    stageCounts(g, Seq(
+      ("raw", lit(true), one),
+      ("license_ok", !col("copyleft_gate"), one),
+      ("pii_clean", !col("copyleft_gate") && !col("pii_gate"), one),
+      ("decontaminated", !col("copyleft_gate") && !col("pii_gate") &&
+        !col("contaminated"), one),
+      ("anonymous", !col("copyleft_gate") && !col("pii_gate") &&
+        !col("contaminated") && col("is_anonymous"), one)))
   }
 
   /** Raw docs → TRAINING-READY sequences: [[curate]], then a

@@ -15,15 +15,22 @@ import org.apache.spark.sql.functions._
   *   - [[report]] = generador.py main (ref: generador.py:25-215):
   *     results frame → cleaned + interpretation columns → text render.
   *
-  * Unlike the reference's driver-side `Pool.imap_unordered` over
-  * pickled pandas groups, every stage here is a distributed plan; the
-  * only driver materialization is the final (small) report render.
+  * With a sink, the two hand off through the written CSV as the
+  * reference's scripts do (generador.py re-reads
+  * `forecast_resultados`), so the scan, resample and kernel run once
+  * per [[run]]. Unlike the reference's driver-side
+  * `Pool.imap_unordered` over pickled pandas groups, every stage here
+  * is a distributed plan; the only driver materialization is the
+  * final (small) report render.
   */
 object ForecastJob {
 
   /** Scan → B1 rename → C1 clean → D2 kernel. Returns the
-    * forecast_results-shaped frame; pass `outCsv` to also sink it in
-    * the reference's stringified-array CSV form (A4).
+    * forecast_results-shaped frame. With `outCsv` the frame is sunk in
+    * the reference's stringified-array CSV form (A4) and the sink,
+    * read back with [[Schemas.forecastResults]], is returned: the
+    * kernel runs once, and the returned rows are the written ones
+    * (`Runtime_sec` included). Without a sink the frame stays lazy.
     */
   def forecast(spark: SparkSession, ventasCsv: String,
       outCsv: Option[String] = None,
@@ -48,8 +55,11 @@ object ForecastJob {
         col("reorder_point").as("Reorder_Point"),
         col("qty_to_order").as("Qty_to_Order"),
         col("runtime_sec").as("Runtime_sec"))
-    outCsv.foreach(p => Ingest.writeCsvCompat(out, p))
-    out
+    outCsv.fold(out) { p =>
+      Ingest.writeCsvCompat(out, p)
+      spark.read.schema(Schemas.forecastResults)
+        .option("header", "true").csv(p)
+    }
   }
 
   /** Results frame (or re-read results CSV) → cleaned/derived frame →
@@ -67,7 +77,8 @@ object ForecastJob {
     Report.renderForecastSvg(series, "ds", "y", "yhat")
 
   /** The reference's two-script flow in one call: forecast then
-    * report over the produced results.
+    * report over the produced results (the written sink when
+    * `outCsv` is given).
     */
   def run(spark: SparkSession, ventasCsv: String,
       outCsv: Option[String] = None,

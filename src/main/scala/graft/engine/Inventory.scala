@@ -20,16 +20,6 @@ object Inventory {
       lit(cfg.serviceLevelZ) * trainStd * math.sqrt(cfg.leadTimeWeeks))
       .otherwise(lit(0.0))
 
-  /** H2 — demand over lead time: mean(forecast) * leadTime
-    * (ref: PRACTICA3.py:72-73).
-    */
-  def demandLeadTime(forecast: Column,
-      cfg: PipelineConfig = PipelineConfig()): Column =
-    when(size(forecast) > 0,
-      aggregate(forecast, lit(0.0), (a, x) => a + x) / size(forecast) *
-        cfg.leadTimeWeeks)
-      .otherwise(lit(0.0))
-
   /** H3 — reorder point (ref: PRACTICA3.py:74). */
   def reorderPoint(dlt: Column, ss: Column): Column = dlt + ss
 

@@ -54,16 +54,6 @@ object Metrics {
       .otherwise(mae / size(y))
   }
 
-  /** G3 over arrays. */
-  def rmseArr(y: Column, yhat: Column): Column =
-    sqrt(aggregate(pairs(y, yhat), lit(0.0),
-      (acc, p) => acc + pow(p("y") - p("yhat"), 2)) / size(y))
-
-  /** G4 over arrays. */
-  def maeArr(y: Column, yhat: Column): Column =
-    aggregate(pairs(y, yhat), lit(0.0),
-      (acc, p) => acc + abs(p("y") - p("yhat"))) / size(y)
-
   // ---- typed Aggregator (reusable UDAF surface, SURVEY §2.K) ----
 
   /** safe_mape as a typed Aggregator over (y, yhat) pairs — the

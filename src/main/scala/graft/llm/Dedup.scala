@@ -574,15 +574,6 @@ object Dedup {
         t -> aggregate(sequence(1, length(t)), 0L,
              (acc, i) -> (acc * 31 + ascii(substring(t, i, 1))) % $P))"""
 
-  /** Token (whitespace-split) polynomial hashes of a text column.
-    * Empty tokens (from consecutive/leading spaces) hash to 0L.
-    * Native ([[PolyHashColumns.tokenHashes]]); the equivalent SQL HOF
-    * `transform(split(text, ' '), t -> fold-per-char)` is what the
-    * DuckDB oracles replay, value-pinned in LlmSpec.
-    */
-  def tokenHashesExpr(text: String): Column =
-    PolyHashColumns.tokenHashes(col(text))
-
   /** Content-token hashes: lowercased, empty tokens dropped — the
     * token form [[decontaminate]] and corpus statistics share. Docs
     * that are empty/whitespace-only yield an empty array. Native
@@ -606,14 +597,26 @@ object Dedup {
   /** Benchmark decontamination: drop every training document sharing
     * at least one word n-gram with the evaluation corpus — the
     * standard n-gram-overlap rule for scrubbing eval leakage out of
-    * training data. Scale shape: both corpora reduce to (gram, id)
-    * rows keyed on a uniform hash; contamination is ONE left-semi
-    * join on the gram (the distinct eval-gram side is small and
-    * broadcastable whenever the eval set is) and the final keep is a
-    * left-anti join on the id. Never a doc×doc comparison.
+    * training data. Returns the kept train ids: train ids ⋉anti
+    * [[contaminatedIds]].
     */
   def decontaminate(train: DataFrame, evalSet: DataFrame, text: String,
-      id: String, n: Int = 8): DataFrame = {
+      id: String, n: Int = 8): DataFrame =
+    train.select(col(id))
+      .join(contaminatedIds(train, evalSet, text, id, n), Seq(id),
+        "left_anti")
+
+  /** The distinct ids of the training documents sharing at least one
+    * word n-gram with the evaluation corpus — the drop set of
+    * [[decontaminate]], for callers that anti-join or flag it against
+    * their own frame. Scale shape: both corpora reduce to (gram, id)
+    * rows keyed on a uniform hash; contamination is ONE left-semi
+    * join on the gram (the distinct eval-gram side is small and
+    * broadcastable whenever the eval set is). Never a doc×doc
+    * comparison.
+    */
+  def contaminatedIds(train: DataFrame, evalSet: DataFrame,
+      text: String, id: String, n: Int = 8): DataFrame = {
     // Tokens here are NON-EMPTY words only, and zero-token documents
     // produce no grams at all: an empty/whitespace-only doc would
     // otherwise fold to the sentinel gram 0L and read as
@@ -625,10 +628,9 @@ object Dedup {
       .select(col(id),
         explode(ngramHashesFromTokenHashes("__th", n)).as("gram"))
     val evalGrams = grams(evalSet).select("gram").distinct()
-    val contaminated = grams(train)
+    grams(train)
       .join(evalGrams, Seq("gram"), "left_semi")
       .select(col(id)).distinct()
-    train.select(col(id)).join(contaminated, Seq(id), "left_anti")
   }
 
   /** Fit half of the STREAMING decontamination stage: the eval set's

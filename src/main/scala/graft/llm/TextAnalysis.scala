@@ -15,22 +15,10 @@ object TextAnalysis {
   def tokenCountExpr(text: String): Column =
     expr(s"size(split(trim($text), '\\\\s+'))")
 
-  /** BPE-ish token count: letter runs, digit runs, and single
-    * non-alphanumeric marks (a cheap stand-in for a real subword
-    * tokenizer's piece count).
-    */
-  def bpeishCountExpr(text: String): Column =
-    expr(s"size(regexp_extract_all($text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\\\s]', 0))")
-
   /** Punctuation-ish ratio: non-alphanumeric-non-space chars / chars. */
   def punctRatioExpr(text: String): Column =
     expr(s"""CAST(length(regexp_replace($text, '[a-zA-Z0-9\\\\s]', ''))
              AS DOUBLE) / length($text)""")
-
-  /** Mean token length. */
-  def avgWordLenExpr(text: String): Column =
-    expr(s"""CAST(length(regexp_replace($text, '\\\\s', '')) AS DOUBLE)
-             / size(split(trim($text), '\\\\s+'))""")
 
   /** Language-specific stopword lists (tiny, for the n-gram/stopword
     * heuristic language ID).
@@ -1261,21 +1249,24 @@ object TextAnalysis {
         .map(o => s"__hits_$o").mkString("greatest(", ", ", ")")
       s"WHEN __hits_$l >= $others AND __hits_$l > 0 THEN '$l'"
     }.mkString(" ")
-    val punct = col("__cs.n_punct").cast("double") /
-      col("__cs.n_chars").cast("double")
+    // ratios over an empty or whitespace-only text (zero chars or
+    // tokens) are null, not a division-by-zero error
+    val punct = try_divide(col("__cs.n_punct").cast("double"),
+      col("__cs.n_chars").cast("double"))
+    val stopRatio = try_divide(col("__hits_en").cast("double"),
+      col("__nt").cast("double"))
     withHits
       .withColumn("n_tokens", col("__nt"))
       .withColumn("n_bpeish", col("__cs.n_bpeish"))
       .withColumn("punct_ratio", round(punct, 6))
-      .withColumn("avg_word_len", round(
-        col("__cs.n_nonspace").cast("double") / col("__nt"), 6))
-      .withColumn("stopword_ratio",
-        round(expr("CAST(__hits_en AS DOUBLE) / __nt"), 6))
+      .withColumn("avg_word_len", round(try_divide(
+        col("__cs.n_nonspace").cast("double"), col("__nt").cast("double")),
+        6))
+      .withColumn("stopword_ratio", round(stopRatio, 6))
       .withColumn("quality", round(
         least(col("__nt").cast("double") / 100.0, lit(1.0)) * 0.4
           + (lit(1.0) - punct) * 0.3
-          + least(expr("CAST(__hits_en AS DOUBLE) / __nt") * 4.0,
-            lit(1.0)) * 0.3, 6))
+          + least(stopRatio * 4.0, lit(1.0)) * 0.3, 6))
       .withColumn("pred_lang", expr(s"CASE $best ELSE 'und' END"))
       .withColumn("fingerprint", fingerprintExpr(text))
       .drop(Seq("__cs", "__toks", "__nt") ++ hitCols: _*)

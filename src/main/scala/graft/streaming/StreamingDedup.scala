@@ -445,14 +445,6 @@ object StreamingDedup {
   def syntheticStage(docs: DataFrame, text: String): DataFrame =
     TextAnalysis.syntheticSignals(docs, text)
 
-  /** Streaming SCRIPT-MIX stage: append [[TextAnalysis.scriptMix]]'s
-    * per-script letter counts + minority-letter ppm to a live feed —
-    * row-local class-erasure regexes, zero state, any output mode;
-    * batch-parity pinned.
-    */
-  def scriptMixStage(docs: DataFrame, text: String): DataFrame =
-    TextAnalysis.scriptMix(docs, text)
-
   /** Streaming HOMOGLYPH-FOLD stage: [[TextAnalysis.confusableFold]]
     * on a live feed — one row-local translate pass, zero state, any
     * output mode. Running it in front of the streaming dedup stages

@@ -2,6 +2,9 @@ package graft
 
 import graft.engine.{Clean, Ingest, PipelineConfig}
 import graft.engine.forecast.Kernel
+import org.apache.spark.graftglue.ListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerTaskEnd}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -53,14 +56,44 @@ class GoldenSpec extends AnyFunSuite {
       .write.mode("overwrite").option("header", "true").csv(dir)
     val cfg = PipelineConfig(useTrendSeasonal = false,
       useHoltWinters = false)
+    // input records read by the run's own jobs (its job group)
+    val sc = spark.sparkContext
+    val group = "forecast-job-run"
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val recordsRead = new java.util.concurrent.atomic.AtomicLong
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.jobGroup.id") == group))
+          e.stageIds.foreach(stages.add(_))
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (stages.contains(e.stageId) && e.taskMetrics != null)
+          recordsRead.addAndGet(e.taskMetrics.inputMetrics.recordsRead)
+    }
+    sc.addSparkListener(listener)
     val (results, reportTxt) =
-      ForecastJob.run(spark, dir, Some(outCsv), cfg)
+      try {
+        sc.setJobGroup(group, "ForecastJob.run")
+        try ForecastJob.run(spark, dir, Some(outCsv), cfg)
+        finally sc.clearJobGroup()
+      } finally {
+        ListenerBus.drain(sc)
+        sc.removeSparkListener(listener)
+      }
+    // the forecast executes once: one scan of the ventas CSV for the
+    // sink, then one read of the two written rows for the report
+    assert(recordsRead.get === ventasRows.size + 2L)
     assert(results.select("SKU").collect().map(_.getString(0)).sorted
       .toSeq === Seq("DENSE", "GAPPY"))
     // sunk CSV re-enters the report stage like generador.py re-reads
     // forecast_resultados: stringified Forecast parses back (A4+F4)
     val reread = spark.read.schema(graft.engine.Schemas.forecastResults)
       .option("header", "true").csv(outCsv)
+    // the returned frame is the written sink, row for row, per-series
+    // wall time included
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).sortBy(_.head.toString).toSeq
+    assert(rows(results) === rows(reread))
     val cleaned = graft.engine.Report.clean(reread)
     assert(cleaned.count() === 2)
     assert(cleaned.filter(col("Forecast_Weeks") === 4).count() === 2)

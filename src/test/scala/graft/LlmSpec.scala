@@ -300,6 +300,84 @@ class LlmSpec extends AnyFunSuite {
       ("decontaminated", 1L)))
   }
 
+  /** The five-aggregate funnel (one aggregate per stage over the
+    * progressively gated frame, unioned) that the one-pass
+    * [[graft.CurationJob.funnel]] replaced: the equivalence reference.
+    */
+  private def funnelReference(docs: org.apache.spark.sql.DataFrame,
+      text: String, id: String, minQuality: Double = 0.5,
+      lang: String = "en",
+      evalSet: Option[org.apache.spark.sql.DataFrame] = None) = {
+    def stage(ord: Int, name: String, df: org.apache.spark.sql.DataFrame) =
+      df.agg(count(lit(1)).as("n_docs"),
+          coalesce(sum(TextAnalysis.tokenCountExpr(text)
+            .cast("long")), lit(0L)).as("n_tokens"))
+        .select(lit(ord.toLong).as("stage_ord"),
+          lit(name).as("stage"), col("n_docs"), col("n_tokens"))
+    val reps = docs.groupBy(col(text))
+      .agg(min(col(id)).as(id))
+      .select(col(id), col(text))
+    val st = TextAnalysis.withStats(reps, text)
+    val q = st.filter(col("quality") >= minQuality)
+    val l = q.filter(col("pred_lang") === lang)
+    val kept = l.select(col(id), col(text))
+    val clean = evalSet match {
+      case Some(ev) =>
+        kept.join(Dedup.decontaminate(kept, ev, text, id), Seq(id))
+      case None => kept
+    }
+    stage(1, "raw", docs)
+      .unionByName(stage(2, "exact_dedup", reps))
+      .unionByName(stage(3, "quality_gate", q))
+      .unionByName(stage(4, "lang_gate", l))
+      .unionByName(stage(5, "decontaminated", clean))
+  }
+
+  test("one-pass funnel equals the five-aggregate reference, with " +
+      "and without an eval set; decontaminate and contaminatedIds " +
+      "partition the train ids") {
+    val good = "the cat and the dog is in the house of a king to see"
+    val good2 = "a king and the dog is in the house of the cat to see it"
+    val decon =
+      "every brave knight must guard a tall tower of stone and gold for the queen"
+    val junk = "zzz ### %%% @@@"
+    val spanish = Seq.fill(15)("el la de que y los es").mkString(" ")
+    val corpus = Seq[(Long, String)](
+      (0L, good), (1L, good), (2L, good),  // duplicates that survive
+      (3L, good2),
+      (4L, junk), (5L, junk),              // duplicates: quality_gate
+      (6L, spanish), (7L, spanish),        // duplicates: lang_gate
+      (8L, decon), (9L, decon),            // duplicates: decontaminated
+      (10L, null), (11L, null),            // null text
+      (12L, ""), (13L, "   "))             // empty / whitespace-only
+      .toDF("doc_id", "text")
+    val ev = Seq((100L, decon), (101L, "   ")).toDF("doc_id", "text")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("stage_ord").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getLong(2),
+          r.getLong(3))).toSeq
+    for (e <- Seq(None, Some(ev))) {
+      val got = rows(graft.CurationJob.funnel(corpus, "text", "doc_id",
+        evalSet = e))
+      assert(got === rows(funnelReference(corpus, "text", "doc_id",
+        evalSet = e)))
+      // not vacuous: every gate drops something, decontamination
+      // only with the eval set
+      val n = got.map(_._3)
+      assert(n.take(4) === Seq(14L, 8L, 4L, 3L))
+      assert(n(4) === (if (e.isDefined) 2L else 3L))
+    }
+    val ids = corpus.select("doc_id").as[Long].collect().toSet
+    val kept = Dedup.decontaminate(corpus, ev, "text", "doc_id")
+      .as[Long].collect()
+    val dropped = Dedup.contaminatedIds(corpus, ev, "text", "doc_id")
+      .as[Long].collect()
+    assert(dropped.toSet === Set(8L, 9L))
+    assert(kept.toSet.intersect(dropped.toSet).isEmpty)
+    assert(kept.length + dropped.length === ids.size)
+    assert(kept.toSet ++ dropped.toSet === ids)
+  }
+
   test("releaseGate/releaseFunnel: each compliance gate drops " +
       "exactly its targeted doc; funnel rows pin to the per-doc " +
       "verdicts") {
