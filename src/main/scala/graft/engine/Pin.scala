@@ -58,38 +58,6 @@ object Pin {
     * calling thread's group still reaches every child job. Any
     * failure is rethrown on the calling thread.
     */
-  /** Run two INDEPENDENT driver-side computations concurrently and
-    * return both results. The [[parallel]] rationale generalized past
-    * eager pins: a multi-round FIT LOOP (BPE merges, EM rounds) is a
-    * chain of driver-blocking collects, so two independent fits
-    * serialize end-to-end even though every stage of one could
-    * back-fill executor slots the other's straggler tail leaves idle
-    * (guide §2.6). `fa` runs on the CALLING thread (keeping its job
-    * group/description for the bench clamp); `fb` runs on a daemon
-    * thread that INHERITS the caller's localProperties
-    * (InheritableThreadLocal), so cancellation reaches both. Either
-    * failure is rethrown after both sides have stopped submitting
-    * work. Results must not depend on scheduling — callers pass
-    * deterministic, independent computations only.
-    */
-  def concurrently[A, B](fa: => A, fb: => B): (A, B) = {
-    @volatile var bOut: Option[B] = None
-    val err =
-      new java.util.concurrent.atomic.AtomicReference[Throwable]
-    val t = new Thread({ () =>
-      try bOut = Some(fb)
-      catch { case e: Throwable => err.compareAndSet(null, e) }
-    }: Runnable, "pin-concurrently")
-    t.setDaemon(true)
-    t.start()
-    val a =
-      try fa
-      catch { case e: Throwable => t.join(); throw e }
-    t.join()
-    if (err.get != null) throw err.get
-    (a, bOut.get)
-  }
-
   def parallel(dfs: DataFrame*): Seq[DataFrame] = {
     if (dfs.size <= 1) dfs.map(_.localCheckpoint())
     else {

@@ -1767,429 +1767,222 @@ object TextAnalysis {
       .select(col("pair"), col("cnt"), col("rank"))
   }
 
-  /** BPE tokenizer fit + apply: learns `numMerges` byte-pair merges
-    * on the corpus (classic Sennrich training on the word-frequency
-    * table — each round merges the most frequent adjacent symbol
-    * pair, ties broken by pair ascending for determinism) and emits
-    * each document's BPE token sequence and count. This is the
-    * tokenizer-grain token accounting [[bpePairCounts]] only
-    * computes statistics for; the `n_bpe_tokens` output (or the
-    * tokens themselves) feeds [[packSequences]] via its
-    * `tokenCounts` hook.
+  /** BPE tokenizer, fit and apply. Merges are learned on the
+    * frequency table of the corpus's lowercased, whitespace-split
+    * words, so no merge crosses a word boundary. Two seed grains:
+    * one symbol per character, or (`byteGrain`) one two-hex-digit
+    * symbol per UTF-8 byte — the GPT-2/Llama grain, whose 256-byte
+    * base alphabet tokenizes every word without UNKs (a byte the fit
+    * never merged surfaces as a one-byte token; tokens are lowercase
+    * hex runs). Token counts feed [[packSequences]] and
+    * [[mixtureWeights]] through their `tokenCounts` hook.
     *
-    * Words are represented as single-space-delimited symbol strings
-    * (`" a b c "`). One merge round rewrites every word with three
-    * plain `replace` calls: double every delimiter, replace
-    * `" a  b "` with `" ab "`, collapse doubles — with doubled
-    * delimiters each pair occurrence owns a private leading AND
-    * trailing space, so one left-to-right replace-all IS the greedy
-    * non-overlapping BPE merge scan (adjacent occurrences no longer
-    * share the boundary space that a single-space encoding loses to
-    * the first match). `replace` has identical left-to-right
-    * semantics in Spark and DuckDB, which is what makes the oracle
-    * exact.
+    * A word is a space-delimited symbol string (`" a b c "`), and a
+    * merge `a b → ab` is a triple `replace`: double every delimiter,
+    * replace `" a  b "` with `" ab "`, collapse the doubles. With
+    * doubled delimiters each pair occurrence owns its leading and
+    * trailing space, so one left-to-right replace-all is the greedy
+    * non-overlapping BPE merge scan; `replace` has the same semantics
+    * in Spark and DuckDB, which keeps the oracles exact. The fold
+    * ([[PolyHashColumns.bpeFold]]) applies a merge list left to
+    * right, so one fold over all rounds' merges equals folding round
+    * by round.
     *
-    * Scale shape: the fit loop runs entirely on the DISTINCT-WORD
-    * frame (vocabulary-sized, orders of magnitude below corpus) —
-    * per round one map-side-combined pair aggregate, a 1-row
-    * TakeOrdered argmax crossed back as a broadcast, and a row-local
-    * rewrite, with `localCheckpoint` truncating lineage exactly as
-    * the connected-components loop does. The corpus itself is
-    * touched twice: one groupBy to build word counts, and one
-    * broadcast join word→tokens for the apply (the only
-    * corpus-sized shuffle is the final per-doc groupBy on the
-    * well-distributed doc id). No driver-side data path: the argmax
-    * stays in the plan.
+    * Each fit round counts adjacent pairs once (weighted by word
+    * count) and takes up to `batch` merges from the top `4·batch`
+    * pairs by (count desc, a asc, b asc). The dominance-disjoint
+    * rule: a candidate survives iff no higher-ranked candidate, kept
+    * or not, shares a symbol with it. Survivors are pairwise
+    * symbol-disjoint and disjoint merges commute, so applying them in
+    * rank order is faithful greedy BPE; `batch = 1` is the classic
+    * one-merge-per-round fit. A grain with no mergeable pair left
+    * stops early, so `rounds · batch` bounds the table size.
     *
-    * Docs with zero content tokens are excluded by construction
-    * (mirrors [[unigramFreqScore]]).
+    * The applies fold each DISTINCT word once and broadcast the
+    * per-word result back to the corpus; the only corpus-sized
+    * shuffle is the per-doc groupBy. Documents with zero content
+    * tokens are dropped (mirrors [[unigramFreqScore]]).
     */
-  def bpeApply(df: DataFrame, text: String, id: String,
-      numMerges: Int = 10): DataFrame = {
-    val vocab = bpeFitVocabSingle(df, text, numMerges)
-    val wordsOf = expr(
-      s"filter(split(lower($text), ' '), t -> t != '')")
-    val perWord = vocab.select(col("word"),
-      expr("filter(split(repr, ' '), x -> x != '')").as("__toks"))
-    df.select(col(id), posexplode(wordsOf).as(Seq("__pos", "word")))
-      .join(broadcast(perWord), Seq("word"))
-      .groupBy(col(id))
-      .agg(sort_array(collect_list(struct(col("__pos"), col("__toks"))))
-        .as("__o"))
-      .withColumn("tokens",
-        flatten(expr("transform(__o, s -> s.__toks)")))
-      .select(col(id),
-        size(col("tokens")).cast("long").as("n_bpe_tokens"),
-        col("tokens"))
+  def bpeApply(df: DataFrame, text: String, id: String, rounds: Int,
+      batch: Int, byteGrain: Boolean = false): DataFrame = {
+    val (words, fitted) = bpeFit(df, text, rounds, batch, Seq(byteGrain))
+    bpeTokens(df, text, id, words, byteGrain, fitted.head)
   }
 
-  /** [[bpeApply]]'s one-merge-per-round fit loop, factored out so the
-    * counts-only apply ([[bpeApplyCounts]]) shares the identical fit:
-    * returns the rewritten per-word vocabulary frame.
-    */
-  private def bpeFitVocabSingle(df: DataFrame, text: String,
-      numMerges: Int): DataFrame = {
-    require(numMerges >= 0, "need numMerges >= 0")
-    val wordsOf = expr(
-      s"filter(split(lower($text), ' '), t -> t != '')")
-    var vocab = df.select(explode(wordsOf).as("word"))
-      .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
-      // " a b c ": space-delimited symbols with boundary spaces;
-      // [^ ] (not .) so newline-class chars split identically to
-      // DuckDB's RE2
-      .withColumn("repr", concat(lit(" "),
-        regexp_replace(col("word"), "([^ ])", "$1 ")))
-      // lazy: strictly sequential consumers (see bpeFitVocab's note)
-      .localCheckpoint(eager = false)
-    var round = 0
-    var exhausted = false
-    while (round < numMerges && !exhausted) {
-      // winner collected DRIVER-SIDE (round 17, the batched-fit
-      // recipe): one TakeOrdered job per round instead of a
-      // broadcast-agg subtree riding inside the rewrite job — the
-      // stage-floor index showed the BPE-fit chains are the
-      // registry's largest scheduler-floor block. An empty result
-      // (no mergeable pair left) ends the loop; the previous form
-      // folded an empty merge array — the identity — for the
-      // remaining rounds, so outputs are unchanged. The winner rides
-      // back as a plan literal exactly like the batched loop's.
-      val best = vocab
-        .select(col("cnt"),
-          expr("filter(split(repr, ' '), x -> x != '')").as("__t"))
-        .filter(size(col("__t")) >= 2)
-        .select(col("cnt"), explode(expr(
-          """transform(sequence(1, size(__t) - 1),
-             i -> struct(element_at(__t, i) AS a,
-                         element_at(__t, i + 1) AS b))""")).as("__p"))
-        .groupBy(col("__p.a").as("a"), col("__p.b").as("b"))
-        .agg(sum(col("cnt")).as("__c"))
-        .orderBy(col("__c").desc, col("a").asc, col("b").asc)
-        .limit(1)
-        .select(col("a"), col("b"))
-        .collect()
-      if (best.isEmpty) exhausted = true
-      else {
-        val ms = best.toSeq
-          .map(r => BpeMerge(r.getString(0), r.getString(1)))
-        vocab = vocab
-          .withColumn("__bpe_ms", typedlit(ms))
-          .withColumn("repr", graft.llm.PolyHashColumns
-            .bpeFold(col("repr"), col("__bpe_ms")))
-          .drop("__bpe_ms")
-          .localCheckpoint(eager = false)
-      }
-      round += 1
-    }
-    vocab
-  }
-
-  /** Counts-only apply from a FITTED vocabulary: (id, n_bpe_tokens)
-    * without ever materializing the token arrays. The token-emitting
-    * applies sort_array/collect_list every word instance's token
-    * array through the per-doc groupBy — the exchange carries every
-    * token of every document, and the aggregation buffers a whole
-    * document's tokens per group. n_bpe_tokens is the SIZE of that
-    * flattened array = the sum of per-word token counts, so the
-    * consumers that only bill tokens (the token-budget cuts, the
-    * mixture/fertility accounting) can aggregate a map-side-combined
-    * SUM of a broadcast per-word count instead (guide §2.3 —
-    * aggregate before you shuffle; the shuffle now moves one partial
-    * sum per doc per partition, never the tokens). Exact: integer
-    * sum, same inner-join row set (every word of `df` is in `vocab`
-    * by construction — both derive from the same corpus), same
-    * zero-content-token doc exclusion. Spec-pinned row-for-row
-    * against the token-emitting forms.
-    */
-  private def bpeCountsFromVocab(df: DataFrame, text: String,
-      id: String, vocab: DataFrame): DataFrame = {
-    val wordsOf = expr(
-      s"filter(split(lower($text), ' '), t -> t != '')")
-    val perWord = vocab.select(col("word"),
-      size(expr("filter(split(repr, ' '), x -> x != '')"))
-        .cast("long").as("__wn"))
-    df.select(col(id), explode(wordsOf).as("word"))
-      .join(broadcast(perWord), Seq("word"))
-      .groupBy(col(id))
-      .agg(sum(col("__wn")).as("n_bpe_tokens"))
-  }
-
-  /** Counts-only twin of [[bpeApply]]: identical one-merge-per-round
-    * fit, (id, n_bpe_tokens) apply via [[bpeCountsFromVocab]].
+  /** Char-grain [[bpeApply]]'s (id, n_bpe_tokens) without the token
+    * arrays: the per-doc shuffle moves one partial sum per doc per
+    * partition.
     */
   def bpeApplyCounts(df: DataFrame, text: String, id: String,
-      numMerges: Int = 10): DataFrame =
-    bpeCountsFromVocab(df, text, id,
-      bpeFitVocabSingle(df, text, numMerges))
-
-  /** Batched BPE tokenizer fit + apply — the scale path past
-    * [[bpeApply]]'s one-merge-per-round driver loop. Per round it
-    * computes the pair counts ONCE and selects up to `batch` merges
-    * by the dominance-disjoint rule: candidates are the top
-    * `4*batch` pairs by (count desc, a asc, b asc), and a candidate
-    * survives iff NO higher-ranked candidate (kept or discarded)
-    * shares a symbol with it. Survivor pairs are pairwise
-    * symbol-disjoint, and disjoint merges commute — a merge only
-    * fuses two adjacent symbols, it never creates or destroys an
-    * adjacency between OTHER symbols — so applying the batch
-    * left-to-right in rank order is faithful greedy BPE for every
-    * selected pair, and `ceil(merges/batch)` rounds replace
-    * `merges` driver round-trips (the wall-time becomes sub-linear
-    * in merges). Dominance (rather than greedy-vs-kept-only)
-    * filtering picks slightly fewer pairs per round but is a pure
-    * per-candidate predicate over the ranked top-C frame — one
-    * tiny anti-join, expressible identically in SQL, no sequential
-    * scan anywhere.
-    *
-    * The whole batch is applied in ONE higher-order fold over a
-    * broadcast merge array (the per-merge rewrite is [[bpeApply]]'s
-    * doubled-delimiter triple-replace, unchanged), so a round costs
-    * one pair aggregate + one TakeOrdered + one anti-join on ≤4·batch
-    * rows + one row-local rewrite of the vocabulary frame,
-    * `localCheckpoint` truncating lineage per round. Merge count per
-    * round is data-dependent (≤ batch); `rounds*batch` bounds the
-    * total. Word-grain boundary, same as [[bpeApply]]: merges are
-    * learned within lowercased whitespace-split words, not at byte
-    * grain across word boundaries — a production tokenizer would run
-    * the same loop over byte-level pre-tokens.
-    */
-  def bpeApplyBatched(df: DataFrame, text: String, id: String,
-      rounds: Int = 7, batch: Int = 8): DataFrame = {
-    val (vocab, _) = bpeFitVocab(df, text, rounds, batch)
-    val wordsOf = expr(
-      s"filter(split(lower($text), ' '), t -> t != '')")
-    val perWord = vocab.select(col("word"),
-      expr("filter(split(repr, ' '), x -> x != '')").as("__toks"))
-    df.select(col(id), posexplode(wordsOf).as(Seq("__pos", "word")))
-      .join(broadcast(perWord), Seq("word"))
-      .groupBy(col(id))
-      .agg(sort_array(collect_list(struct(col("__pos"), col("__toks"))))
-        .as("__o"))
-      .withColumn("tokens",
-        flatten(expr("transform(__o, s -> s.__toks)")))
-      .select(col(id),
-        size(col("tokens")).cast("long").as("n_bpe_tokens"),
-        col("tokens"))
+      rounds: Int, batch: Int): DataFrame = {
+    val (words, fitted) = bpeFit(df, text, rounds, batch, Seq(false))
+    bpeCounts(df, text, id, words,
+      Seq(("n_bpe_tokens", false, fitted.head)))
   }
 
-  /** Counts-only twin of [[bpeApplyBatched]]: identical batched
-    * dominance-disjoint fit, (id, n_bpe_tokens) apply via
-    * [[bpeCountsFromVocab]] — for the consumers that bill tokens
-    * without reading them.
+  /** The fitted merge table (round order, rank order within a round):
+    * the tokenizer artifact to fit once on a reference corpus and ship
+    * to [[bpeApplyWithMerges]] or
+    * [[graft.streaming.StreamingDedup.tokenizerStage]].
     */
-  def bpeApplyBatchedCounts(df: DataFrame, text: String, id: String,
-      rounds: Int = 7, batch: Int = 8): DataFrame =
-    bpeCountsFromVocab(df, text, id,
-      bpeFitVocab(df, text, rounds, batch)._1)
+  def bpeFitMerges(df: DataFrame, text: String, rounds: Int,
+      batch: Int, byteGrain: Boolean = false): Seq[BpeMerge] =
+    bpeFit(df, text, rounds, batch, Seq(byteGrain))._2.head
+
+  /** The char-grain and byte-grain merge tables of one corpus, equal
+    * to the two [[bpeFitMerges]] calls at a shared word count and one
+    * collect per round.
+    */
+  def bpeFitMergesDual(df: DataFrame, text: String, rounds: Int,
+      batch: Int): (Seq[BpeMerge], Seq[BpeMerge]) = {
+    val fitted = bpeFit(df, text, rounds, batch, Seq(false, true))._2
+    (fitted(0), fitted(1))
+  }
+
+  /** [[bpeApply]]'s output from an already-fitted merge table; the
+    * rules ride as a plan literal, so nothing is fitted here.
+    */
+  def bpeApplyWithMerges(df: DataFrame, text: String, id: String,
+      merges: Seq[BpeMerge], byteGrain: Boolean = false): DataFrame =
+    bpeTokens(df, text, id, bpeDistinctWords(df, text), byteGrain, merges)
+
+  /** (id, n_char_tokens, n_byte_tokens) from already-fitted char and
+    * byte merge tables, in one corpus pass.
+    */
+  def bpeTokenCountsDual(df: DataFrame, text: String, id: String,
+      chMerges: Seq[BpeMerge], byMerges: Seq[BpeMerge]): DataFrame =
+    bpeCounts(df, text, id, bpeDistinctWords(df, text),
+      Seq(("n_char_tokens", false, chMerges),
+        ("n_byte_tokens", true, byMerges)))
 
   /** One fitted merge rule: fuse adjacent symbols `a b → ab`. */
   case class BpeMerge(a: String, b: String)
 
-  /** Byte-level BPE fit + apply — the production tokenizer grain
-    * (GPT-2/Llama style). Merges are learned over each word's UTF-8
-    * BYTES: the seed symbols are two-hex-digit byte literals
-    * (`é` starts as `c3 a9`), so the base alphabet is the 256 bytes
-    * and EVERY word tokenizes with zero UNKs — an unmerged byte
-    * simply surfaces as a one-byte token (the byte-fallback
-    * property). This changes fertility on non-ASCII text relative to
-    * the char-grain fit ([[bpeApplyBatched]]): a char fit gets 'é'
-    * as ONE seed symbol for free, the byte fit must spend a learned
-    * merge to fuse `c3 a9` — so a vocabulary fitted on mostly-ASCII
-    * data fragments multibyte scripts harder, which is exactly the
-    * bias the fertility contrast query measures. Same batched
-    * dominance-disjoint fit loop, same doubled-delimiter fold, same
-    * one-fold-per-distinct-word apply shape as [[bpeApplyBatched]];
-    * output tokens are lowercase hex strings (merged symbols are
-    * concatenated hex runs, decodable back to bytes).
+  /** A word's seed symbol string: `" h é "` at char grain,
+    * `" 68 c3 a9 "` at byte grain. `[^ ]`, not `.`, so newline-class
+    * characters split as in DuckDB's RE2.
     */
-  def bpeBytesApply(df: DataFrame, text: String, id: String,
-      rounds: Int = 10, batch: Int = 8): DataFrame = {
-    val (vocab, _) = bpeFitVocab(df, text, rounds, batch,
-      byteGrain = true)
-    val wordsOf = expr(
-      s"filter(split(lower($text), ' '), t -> t != '')")
-    val perWord = vocab.select(col("word"),
-      expr("filter(split(repr, ' '), x -> x != '')").as("__toks"))
-    df.select(col(id), posexplode(wordsOf).as(Seq("__pos", "word")))
-      .join(broadcast(perWord), Seq("word"))
-      .groupBy(col(id))
-      .agg(sort_array(collect_list(struct(col("__pos"), col("__toks"))))
-        .as("__o"))
-      .withColumn("tokens",
-        flatten(expr("transform(__o, s -> s.__toks)")))
-      .select(col(id),
-        size(col("tokens")).cast("long").as("n_bpe_tokens"),
-        col("tokens"))
-  }
-
-  /** Fit-only half of [[bpeApplyBatched]]: the ordered merge-rule
-    * table (round order, rank order within a round) — the tokenizer
-    * ARTIFACT a pipeline fits once on a reference corpus and then
-    * ships to any apply site: [[bpeApplyWithMerges]] in batch,
-    * [[graft.streaming.StreamingDedup.tokenizerStage]] on a live
-    * feed. ≤ rounds·batch tiny rows; merge tables are model metadata
-    * (like IVF centroids), broadcast-scale by construction.
-    */
-  def bpeFitMerges(df: DataFrame, text: String,
-      rounds: Int = 7, batch: Int = 8): Seq[BpeMerge] =
-    bpeFitVocab(df, text, rounds, batch)._2
-
-  /** Shared batched fit loop: per round, pair counts once →
-    * dominance-disjoint survivor batch → one HOF-fold vocabulary
-    * rewrite, `localCheckpoint` truncating lineage. Returns the
-    * rewritten per-word vocabulary AND the accumulated merge rules.
-    * The ≤batch survivor rows come to the driver each round — the
-    * previous `broadcast(batchRow)` collected the same rows
-    * driver-side anyway — which also enables an early exit once the
-    * vocabulary has no mergeable pair left.
-    */
-  private def bpeFitVocab(df: DataFrame, text: String,
-      rounds: Int, batch: Int, byteGrain: Boolean = false)
-      : (DataFrame, Seq[BpeMerge]) = {
-    require(rounds >= 0 && batch >= 1, "need rounds >= 0, batch >= 1")
-    val candCap = 4 * batch
-    val wordsOf = expr(
-      s"filter(split(lower($text), ' '), t -> t != '')")
-    // seed symbols: one per character (char grain) or one lowercase
-    // two-hex-digit literal per UTF-8 byte (byte grain — hex keeps
-    // symbols in the same space-delimited repr the fold machinery
-    // and the DuckDB mirror already share)
-    val seedRepr =
+  private[graft] def bpeSeed(word: Column, byteGrain: Boolean): Column =
+    concat(lit(" "),
       if (byteGrain)
-        concat(lit(" "), regexp_replace(
-          lower(hex(encode(col("word"), "UTF-8"))), "(..)", "$1 "))
-      else
-        concat(lit(" "), regexp_replace(col("word"), "([^ ])", "$1 "))
-    // LAZY checkpoints in this loop (round 21): each round's vocab
-    // has strictly SEQUENTIAL consumers — the next round's
-    // driver-side TakeOrdered collect materializes it, then the
-    // rewrite reads the already-cached blocks — so the lazy-persist
-    // consumer race (the winnowPairs 20.5 s lesson) cannot occur
-    // here, and the per-round eager materialization job disappears:
-    // the fit chain drops from ~2 jobs per round to ~1. Lineage is
-    // still truncated per round (the checkpoint plan node is built
-    // eagerly; only the materialization folds into the collect).
-    var vocab = df.select(explode(wordsOf).as("word"))
+        regexp_replace(lower(hex(encode(word, "UTF-8"))), "(..)", "$1 ")
+      else regexp_replace(word, "([^ ])", "$1 "))
+
+  private def bpeWords(text: String): Column =
+    expr(s"filter(split(lower($text), ' '), t -> t != '')")
+
+  private def bpeDistinctWords(df: DataFrame, text: String): DataFrame =
+    df.select(explode(bpeWords(text)).as("word")).distinct()
+
+  /** The fit loop: one merge table per grain of `grains`
+    * (`byteGrain` flags) over one shared word-count frame. Each round
+    * is ONE collect of every live grain's top-`4·batch` cut (a union
+    * when more than one grain is live). The cut's order is strict
+    * and total, so the driver recovers it per grain with [[u8Less]]
+    * and then runs the dominance prefix scan.
+    *
+    * Vocabularies are lazy checkpoints: each has strictly sequential
+    * consumers (the next round's collect materializes it, the rewrite
+    * then reads the cached blocks), so lineage is cut per round at no
+    * extra job. The word-count frame is pinned EAGERLY only when two
+    * or more grains read it: their round-1 pair aggregates are
+    * sibling stages of one job and would race to materialize a lazy
+    * pin.
+    *
+    * Returns the distinct words (the first grain's seed vocabulary,
+    * materialized by round 1) and each grain's merges.
+    */
+  private def bpeFit(df: DataFrame, text: String, rounds: Int,
+      batch: Int, grains: Seq[Boolean])
+      : (DataFrame, Seq[Seq[BpeMerge]]) = {
+    require(rounds >= 0 && batch >= 1, "need rounds >= 0, batch >= 1")
+    val counted = df.select(explode(bpeWords(text)).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
-      .withColumn("repr", seedRepr)
-      .localCheckpoint(eager = false)
-    val fitted = Seq.newBuilder[BpeMerge]
+    val words =
+      if (grains.size > 1) counted.localCheckpoint() else counted
+    val seeds = grains.map(g => words
+      .withColumn("repr", bpeSeed(col("word"), g))
+      .localCheckpoint(eager = false))
+    val vocab = seeds.toArray
+    val fitted = Array.fill(grains.size)(Vector.empty[BpeMerge])
+    val live = Array.fill(grains.size)(true)
     var round = 0
-    var exhausted = false
-    while (round < rounds && !exhausted) {
-      val pairs = vocab
-        .select(col("cnt"),
-          expr("filter(split(repr, ' '), x -> x != '')").as("__t"))
-        .filter(size(col("__t")) >= 2)
-        .select(col("cnt"), explode(expr(
-          """transform(sequence(1, size(__t) - 1),
-             i -> struct(element_at(__t, i) AS a,
-                         element_at(__t, i + 1) AS b))""")).as("__p"))
-        .groupBy(col("__p.a").as("a"), col("__p.b").as("b"))
-        .agg(sum(col("cnt")).as("__c"))
-      // TakeOrdered top-C (no full-table single-partition window),
-      // then rank + dominance-disjoint survivor selection DRIVER-SIDE
-      // on the collected ≤candCap-row frame (round 17; previously a
-      // checkpoint + broadcast rank join + anti-join — correct, but 2
-      // extra jobs and a checkpoint PER ROUND, and the stage-floor
-      // index showed the BPE-fit family at 47-80 sequential jobs is
-      // the registry's largest scheduler-floor block; the ≤batch
-      // survivors came to the driver anyway). Replay is EXACT: the
-      // cut's (cnt desc, a asc, b asc) order is strict and total
-      // (pairs are distinct after the groupBy), TakeOrdered output
-      // arrives in that order, so the old predecessor-count rank ==
-      // position + 1, and the old anti-join rule "blocked by ANY
-      // higher-ranked candidate sharing a symbol" is the prefix scan
-      // below — fitted merge tables, and every oracle replaying
-      // them, stay bit-identical. candCap is a constant: the collect
-      // is ≤ 4·batch tiny rows at any corpus size.
-      val topC = pairs
-        .orderBy(col("__c").desc, col("a").asc, col("b").asc)
-        .limit(candCap)
+    while (round < rounds && live.contains(true)) {
+      val rows = grains.indices.filter(live).map(g => vocab(g)
+          .select(col("cnt"),
+            filter(split(col("repr"), " "), _ =!= "").as("__t"))
+          .filter(size(col("__t")) >= 2)
+          .select(col("cnt"), explode(expr(
+            """transform(sequence(1, size(__t) - 1),
+               i -> struct(element_at(__t, i) AS a,
+                           element_at(__t, i + 1) AS b))""")).as("__p"))
+          .groupBy(col("__p.a").as("a"), col("__p.b").as("b"))
+          .agg(sum(col("cnt")).as("__c"))
+          .orderBy(col("__c").desc, col("a").asc, col("b").asc)
+          .limit(4 * batch)
+          .select(lit(g).as("__g"), col("a"), col("b"), col("__c")))
+        .reduce(_.unionByName(_))
         .collect()
-        .map(r => (r.getString(0), r.getString(1)))
-      val ms = topC.zipWithIndex.filter { case ((a, b), i) =>
-          !topC.take(i).exists { case (ja, jb) =>
-            ja == a || ja == b || jb == a || jb == b }
+      for (g <- grains.indices if live(g)) {
+        val top = rows.filter(_.getInt(0) == g)
+          .map(r => (r.getString(1), r.getString(2), r.getLong(3)))
+          .sortWith { case ((a1, b1, c1), (a2, b2, c2)) =>
+            c1 > c2 || (c1 == c2 && (u8Less(a1, a2) ||
+              (a1 == a2 && u8Less(b1, b2)))) }
+        val ms: Seq[BpeMerge] = top.zipWithIndex.collect {
+          case ((a, b, _), i) if !top.take(i).exists { case (ja, jb, _) =>
+              ja == a || ja == b || jb == a || jb == b } => BpeMerge(a, b)
+        }.take(batch).toSeq
+        if (ms.isEmpty) live(g) = false
+        else {
+          fitted(g) ++= ms
+          if (round + 1 < rounds) // the last rewrite would go unread
+            vocab(g) = vocab(g)
+              .withColumn("repr", PolyHashColumns.bpeFold(col("repr"),
+                typedlit(ms)))
+              .localCheckpoint(eager = false)
         }
-        .take(batch)
-        .map { case ((a, b), _) => BpeMerge(a, b) }.toSeq
-      if (ms.isEmpty) exhausted = true
-      else {
-        fitted ++= ms
-        // merges in rank order as a plan literal; the per-merge
-        // rewrite is bpeApply's doubled-delimiter triple-replace
-        vocab = vocab
-          .withColumn("__bpe_ms", typedlit(ms))
-          .withColumn("repr", graft.llm.PolyHashColumns
-            .bpeFold(col("repr"), col("__bpe_ms")))
-          .drop("__bpe_ms")
-          .localCheckpoint(eager = false)
       }
       round += 1
     }
-    (vocab, fitted.result())
+    (seeds.head.select(col("word")), fitted.toSeq)
   }
 
-  /** Apply-only half: tokenize with an ALREADY-FITTED merge table.
-    * The fold runs once per DISTINCT word (broadcast join back to
-    * the corpus — [[bpeApplyBatched]]'s apply shape); the merge
-    * rules ride as a plan literal, so there is no fit-side job at
-    * all. Same output contract as [[bpeApplyBatched]]: (id,
-    * n_bpe_tokens, tokens), zero-content-token docs dropped.
-    */
-  def bpeApplyWithMerges(df: DataFrame, text: String, id: String,
-      merges: Seq[BpeMerge]): DataFrame =
-    bpeApplyWithMergesImpl(df, text, id, merges, byteGrain = false)
+  /** A distinct word's tokens under one grain's merge table. */
+  private def bpeWordTokens(byteGrain: Boolean, ms: Seq[BpeMerge])
+      : Column =
+    filter(split(PolyHashColumns.bpeFold(
+      bpeSeed(col("word"), byteGrain), typedlit(ms)), " "), _ =!= "")
 
-  /** Byte-grain fit-only half ([[bpeBytesApply]]'s merge table) —
-    * the artifact to fit on a reference corpus and ship to
-    * [[bpeBytesApplyWithMerges]]; with the 256-byte base alphabet
-    * the table is the ONLY model state a byte-level tokenizer has.
-    */
-  def bpeBytesFitMerges(df: DataFrame, text: String,
-      rounds: Int = 10, batch: Int = 8): Seq[BpeMerge] =
-    bpeFitVocab(df, text, rounds, batch, byteGrain = true)._2
-
-  /** Byte-grain apply with an already-fitted merge table. This is
-    * where byte FALLBACK does its work: a word whose characters the
-    * fit corpus never saw still tokenizes — its unseen bytes simply
-    * surface unmerged (two hex-symbol tokens per 2-byte codepoint),
-    * where a char-grain tokenizer emits the unseen char as one seed
-    * symbol. The fertility contrast between the two on out-of-fit
-    * scripts is the re-billing the `fertility_bytes` query measures.
-    */
-  def bpeBytesApplyWithMerges(df: DataFrame, text: String, id: String,
-      merges: Seq[BpeMerge]): DataFrame =
-    bpeApplyWithMergesImpl(df, text, id, merges, byteGrain = true)
-
-  private def bpeApplyWithMergesImpl(df: DataFrame, text: String,
-      id: String, merges: Seq[BpeMerge], byteGrain: Boolean)
-      : DataFrame = {
-    val wordsOf = expr(
-      s"filter(split(lower($text), ' '), t -> t != '')")
-    val seed =
-      if (byteGrain)
-        concat(lit(" "), regexp_replace(
-          lower(hex(encode(col("word"), "UTF-8"))), "(..)", "$1 "))
-      else
-        concat(lit(" "), regexp_replace(col("word"), "([^ ])", "$1 "))
-    val perWord = df.select(explode(wordsOf).as("word")).distinct()
-      .withColumn("__bpe_ms", typedlit(merges))
-      .withColumn("__folded",
-        graft.llm.PolyHashColumns.bpeFold(seed, col("__bpe_ms")))
-      .withColumn("__toks",
-        expr("filter(split(__folded, ' '), x -> x != '')"))
-      .select(col("word"), col("__toks"))
-    df.select(col(id), posexplode(wordsOf).as(Seq("__pos", "word")))
-      .join(broadcast(perWord), Seq("word"))
+  /** (id, n_bpe_tokens, tokens), tokens in word order. */
+  private def bpeTokens(df: DataFrame, text: String, id: String,
+      words: DataFrame, byteGrain: Boolean, ms: Seq[BpeMerge])
+      : DataFrame =
+    df.select(col(id),
+        posexplode(bpeWords(text)).as(Seq("__pos", "word")))
+      .join(broadcast(words.select(col("word"),
+        bpeWordTokens(byteGrain, ms).as("__toks"))), Seq("word"))
       .groupBy(col(id))
-      .agg(sort_array(collect_list(struct(col("__pos"), col("__toks"))))
-        .as("__o"))
-      .withColumn("tokens",
-        flatten(expr("transform(__o, s -> s.__toks)")))
-      .select(col(id),
-        size(col("tokens")).cast("long").as("n_bpe_tokens"),
+      .agg(flatten(transform(
+        sort_array(collect_list(struct(col("__pos"), col("__toks")))),
+        _.getField("__toks"))).as("tokens"))
+      .select(col(id), size(col("tokens")).cast("long").as("n_bpe_tokens"),
         col("tokens"))
+
+  /** (id, one count column per `(name, byteGrain, merges)` grain),
+    * each a map-side-combined sum.
+    */
+  private def bpeCounts(df: DataFrame, text: String, id: String,
+      words: DataFrame, grains: Seq[(String, Boolean, Seq[BpeMerge])])
+      : DataFrame = {
+    val sums = grains.map { case (name, _, _) => sum(col(name)).as(name) }
+    df.select(col(id), explode(bpeWords(text)).as("word"))
+      .join(broadcast(words.select(col("word") +: grains.map {
+        case (name, byteGrain, ms) =>
+          size(bpeWordTokens(byteGrain, ms)).cast("long").as(name) }: _*)),
+        Seq("word"))
+      .groupBy(col(id))
+      .agg(sums.head, sums.tail: _*)
   }
 
   /** UTF-8 byte order on strings — UTF8String.binaryCompare, the
@@ -2208,151 +2001,6 @@ object TextAnalysis {
       i += 1
     }
     a.length < b.length
-  }
-
-  /** Fit the char-grain AND byte-grain batched merge tables over the
-    * SAME frame in ONE driver loop (round 22, guide §1.2/§2.6): the
-    * two fits are independent, but each costs one driver-blocking
-    * TakeOrdered collect per round — run separately (even overlapped
-    * via [[graft.engine.Pin.concurrently]]) that is 2·rounds jobs of
-    * scheduler floor, and the seed word-count aggregation scans the
-    * corpus twice. Here the word-count frame is computed once and
-    * pinned (both grains' vocabularies are row-local projections of
-    * it), and each round collects BOTH grains' top-C candidate cuts
-    * in ONE job (a union of the two exact TakeOrdered legs, tagged).
-    * Replay is exact per grain: each leg is the identical
-    * (cnt desc, a asc, b asc) top-4·batch cut the single fit
-    * collects, re-ordered driver-side with the SAME comparator the
-    * engine sorted by ([[u8Less]] — UTF-8 byte order, not UTF-16),
-    * and the dominance-disjoint prefix scan is unchanged — so the
-    * fitted merge tables are bit-identical to
-    * ([[bpeFitMerges]], [[bpeBytesFitMerges]]) (spec-pinned). A grain
-    * with no mergeable pair left simply stops contributing a leg;
-    * the other continues alone, exactly as its single fit would.
-    */
-  def bpeFitMergesDual(df: DataFrame, text: String,
-      rounds: Int = 10, batch: Int = 8)
-      : (Seq[BpeMerge], Seq[BpeMerge]) = {
-    require(rounds >= 0 && batch >= 1, "need rounds >= 0, batch >= 1")
-    val candCap = 4 * batch
-    val wordsOf = expr(
-      s"filter(split(lower($text), ' '), t -> t != '')")
-    // EAGER pin: the two grains' round-1 pair aggregates are sibling
-    // stages of ONE collect job — a lazy checkpoint would make them
-    // race to materialize the shared frame (the winnowPairs
-    // lazy-persist lesson); one vocabulary-sized materialization job
-    // replaces the second corpus-wide word-count pass.
-    val words = df.select(explode(wordsOf).as("word"))
-      .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
-    var vocabCh = words
-      .withColumn("repr", concat(lit(" "),
-        regexp_replace(col("word"), "([^ ])", "$1 ")))
-      .localCheckpoint(eager = false)
-    var vocabBy = words
-      .withColumn("repr", concat(lit(" "), regexp_replace(
-        lower(hex(encode(col("word"), "UTF-8"))), "(..)", "$1 ")))
-      .localCheckpoint(eager = false)
-    def topLeg(vocab: DataFrame, tag: String): DataFrame = vocab
-      .select(col("cnt"),
-        expr("filter(split(repr, ' '), x -> x != '')").as("__t"))
-      .filter(size(col("__t")) >= 2)
-      .select(col("cnt"), explode(expr(
-        """transform(sequence(1, size(__t) - 1),
-           i -> struct(element_at(__t, i) AS a,
-                       element_at(__t, i + 1) AS b))""")).as("__p"))
-      .groupBy(col("__p.a").as("a"), col("__p.b").as("b"))
-      .agg(sum(col("cnt")).as("__c"))
-      .orderBy(col("__c").desc, col("a").asc, col("b").asc)
-      .limit(candCap)
-      .select(lit(tag).as("tag"), col("a"), col("b"), col("__c"))
-    val fittedCh = Seq.newBuilder[BpeMerge]
-    val fittedBy = Seq.newBuilder[BpeMerge]
-    var exhaustedCh = false
-    var exhaustedBy = false
-    var round = 0
-    while (round < rounds && !(exhaustedCh && exhaustedBy)) {
-      val legs = Seq(
-        if (exhaustedCh) None else Some(topLeg(vocabCh, "c")),
-        if (exhaustedBy) None else Some(topLeg(vocabBy, "b"))).flatten
-      val rows = legs.reduce(_.unionByName(_)).collect()
-      // per grain: recover the TakeOrdered order driver-side (the
-      // collected SET is exactly the engine's top-candCap cut; the
-      // comparator below replays the engine's strict total order),
-      // then the bpeFitVocab dominance-disjoint prefix scan verbatim
-      def msOf(tag: String): Seq[BpeMerge] = {
-        val topC = rows.iterator
-          .filter(_.getString(0) == tag)
-          .map(r => (r.getString(1), r.getString(2), r.getLong(3)))
-          .toArray
-          .sortWith { case ((a1, b1, c1), (a2, b2, c2)) =>
-            c1 > c2 || (c1 == c2 && (u8Less(a1, a2) ||
-              (a1 == a2 && u8Less(b1, b2)))) }
-          .map { case (a, b, _) => (a, b) }
-        topC.zipWithIndex.filter { case ((a, b), i) =>
-            !topC.take(i).exists { case (ja, jb) =>
-              ja == a || ja == b || jb == a || jb == b }
-          }
-          .take(batch)
-          .map { case ((a, b), _) => BpeMerge(a, b) }.toSeq
-      }
-      def rewrite(vocab: DataFrame, ms: Seq[BpeMerge]): DataFrame =
-        vocab
-          .withColumn("__bpe_ms", typedlit(ms))
-          .withColumn("repr", graft.llm.PolyHashColumns
-            .bpeFold(col("repr"), col("__bpe_ms")))
-          .drop("__bpe_ms")
-          .localCheckpoint(eager = false)
-      if (!exhaustedCh) {
-        val ms = msOf("c")
-        if (ms.isEmpty) exhaustedCh = true
-        else { fittedCh ++= ms; vocabCh = rewrite(vocabCh, ms) }
-      }
-      if (!exhaustedBy) {
-        val ms = msOf("b")
-        if (ms.isEmpty) exhaustedBy = true
-        else { fittedBy ++= ms; vocabBy = rewrite(vocabBy, ms) }
-      }
-      round += 1
-    }
-    (fittedCh.result(), fittedBy.result())
-  }
-
-  /** Dual-grain counts-only apply with ALREADY-FITTED merge tables:
-    * (id, n_char_tokens, n_byte_tokens) in ONE corpus pass. The
-    * separate applies each exploded the corpus, built their own
-    * distinct-word fold, and collect_list'd token arrays through a
-    * per-doc groupBy; the fertility contrast only ever bills the two
-    * COUNTS, so this folds both grains over ONE distinct-word frame
-    * (two row-local folds per distinct word), broadcasts one
-    * word → (n_char, n_byte) map, and sums both counts in one
-    * map-side-combined aggregate (guide §2.3 — the exchange moves two
-    * longs per doc per partition, never tokens). Same inner-join row
-    * set and zero-content-token exclusion as the token-emitting
-    * applies; spec-pinned row-for-row against them.
-    */
-  def bpeTokenCountsDual(df: DataFrame, text: String, id: String,
-      chMerges: Seq[BpeMerge], byMerges: Seq[BpeMerge]): DataFrame = {
-    val wordsOf = expr(
-      s"filter(split(lower($text), ' '), t -> t != '')")
-    val charSeed = concat(lit(" "),
-      regexp_replace(col("word"), "([^ ])", "$1 "))
-    val byteSeed = concat(lit(" "), regexp_replace(
-      lower(hex(encode(col("word"), "UTF-8"))), "(..)", "$1 "))
-    def nToks(seed: org.apache.spark.sql.Column,
-        ms: Seq[BpeMerge]): org.apache.spark.sql.Column =
-      size(filter(split(graft.llm.PolyHashColumns
-          .bpeFold(seed, typedlit(ms)), " "),
-        x => x =!= lit(""))).cast("long")
-    val perWord = df.select(explode(wordsOf).as("word")).distinct()
-      .select(col("word"),
-        nToks(charSeed, chMerges).as("__cn"),
-        nToks(byteSeed, byMerges).as("__bn"))
-    df.select(col(id), explode(wordsOf).as("word"))
-      .join(broadcast(perWord), Seq("word"))
-      .groupBy(col(id))
-      .agg(sum(col("__cn")).as("n_char_tokens"),
-        sum(col("__bn")).as("n_byte_tokens"))
   }
 
   /** Bigram language-model quality score: per document, the mean
@@ -3867,7 +3515,7 @@ object TextAnalysis {
     * byte sequences — `length` counts bytes, single-char pieces ARE
     * single bytes (the SentencePiece byte-fallback floor), and the
     * char sort order equals the byte order. Rendered back to the
-    * lowercase-hex convention ([[bpeBytesApply]]'s token repr) at
+    * lowercase-hex convention (byte-grain [[bpeApply]]'s tokens) at
     * the output edge.
     */
   private def byteMapExpr(c: String): Column =

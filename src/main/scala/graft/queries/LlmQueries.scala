@@ -826,7 +826,7 @@ object LlmQueries {
         .orderBy("doc_id")
     }),
     // the same budget cut at TOKENIZER grain: n_bpe_tokens from
-    // bpeApply (10 merges) replaces the whitespace count — the
+    // 10 one-merge BPE rounds replace the whitespace count — the
     // accounting a real pretraining pipeline bills against. Budget
     // scaled ~5x (10-merge BPE tokens are near-character-grain).
     // Same distributed prefix sum; integral counts keep the
@@ -835,10 +835,10 @@ object LlmQueries {
       val docs = t(s, d, "documents")
       val stats = TextAnalysis.withStats(docs, "text")
         .select(col("doc_id"), col("quality"))
-      // counts-only apply (round 22): the budget bills token COUNTS,
-      // so no token arrays ride the per-doc groupBy exchange
+      // counts-only apply: the budget bills token COUNTS, so no
+      // token arrays ride the per-doc groupBy exchange
       val bpe = TextAnalysis.bpeApplyCounts(docs, "text", "doc_id",
-          numMerges = 10)
+          rounds = 10, batch = 1)
         .select(col("doc_id"), col("n_bpe_tokens"))
       graft.engine.Dist.prefixSum(stats.join(bpe, Seq("doc_id")),
         Seq(col("quality").desc, col("doc_id")), "n_bpe_tokens",
@@ -847,7 +847,7 @@ object LlmQueries {
         .orderBy("doc_id")
     }),
     // the budget cut re-billed at the BATCHED tokenizer grain
-    // (bpeApplyBatched's vocabulary) — same distributed prefix sum.
+    // (10 rounds × ≤8 merges) — same distributed prefix sum.
     // Budget 40000, not 75000: 80 batched merges compress the sf0.01
     // corpus to ~61k tokens total, so the whitespace-grain budget
     // would keep everything and never exercise the cut
@@ -855,8 +855,8 @@ object LlmQueries {
       val docs = t(s, d, "documents")
       val stats = TextAnalysis.withStats(docs, "text")
         .select(col("doc_id"), col("quality"))
-      // counts-only apply (round 22) — see token_budget_cut_bpe
-      val bpe = TextAnalysis.bpeApplyBatchedCounts(docs, "text",
+      // counts-only apply — see token_budget_cut_bpe
+      val bpe = TextAnalysis.bpeApplyCounts(docs, "text",
           "doc_id", rounds = 10, batch = 8)
         .select(col("doc_id"), col("n_bpe_tokens"))
       graft.engine.Dist.prefixSum(stats.join(bpe, Seq("doc_id")),
@@ -1503,14 +1503,15 @@ object LlmQueries {
         .orderBy("source")
     }),
     // the same reweighting billed at TOKENIZER grain: per-source
-    // token mass from bpeApply's counts — completes the BPE
-    // accounting trio (pack_sequences, token_budget_cut_bpe, this)
+    // token mass from BPE counts (10 one-merge rounds) — completes
+    // the BPE accounting trio (pack_sequences, token_budget_cut_bpe,
+    // this)
     "mix_weights_bpe" -> ((s, d) => {
       val docs = t(s, d, "documents")
       val withBpe = docs.join(
-        // counts-only apply (round 22) — see token_budget_cut_bpe
+        // counts-only apply — see token_budget_cut_bpe
         TextAnalysis.bpeApplyCounts(docs, "text", "doc_id",
-            numMerges = 10)
+            rounds = 10, batch = 1)
           .select(col("doc_id"), col("n_bpe_tokens")), Seq("doc_id"))
       TextAnalysis.mixtureWeights(withBpe, "text", "source",
         Map("src0" -> 0.5, "src1" -> 0.3, "src2" -> 0.2),
@@ -1518,13 +1519,13 @@ object LlmQueries {
         .orderBy("source")
     }),
     // the same reweighting billed at the BATCHED tokenizer grain
-    // (bpeApplyBatched's vocabulary, 10 rounds × ≤8 merges) — the
-    // scale-path tokenizer feeding the same accounting hook
+    // (10 rounds × ≤8 merges) — the scale-path tokenizer feeding the
+    // same accounting hook
     "mix_weights_bpe_batched" -> ((s, d) => {
       val docs = t(s, d, "documents")
       val withBpe = docs.join(
-        // counts-only apply (round 22) — see token_budget_cut_bpe
-        TextAnalysis.bpeApplyBatchedCounts(docs, "text", "doc_id",
+        // counts-only apply — see token_budget_cut_bpe
+        TextAnalysis.bpeApplyCounts(docs, "text", "doc_id",
           rounds = 10, batch = 8)
           .select(col("doc_id"), col("n_bpe_tokens")), Seq("doc_id"))
       TextAnalysis.mixtureWeights(withBpe, "text", "source",
@@ -1748,7 +1749,7 @@ object LlmQueries {
     "bpe_apply" -> ((s, d) => {
       Canon.stringifyArrays(
         TextAnalysis.bpeApply(t(s, d, "documents"), "text", "doc_id",
-          numMerges = 10))
+          rounds = 10, batch = 1))
         .orderBy("doc_id")
     }),
     // batched BPE fit: up to 8 dominance-disjoint merges per round,
@@ -1757,7 +1758,7 @@ object LlmQueries {
     // and fold
     "bpe_apply_batched" -> ((s, d) => {
       Canon.stringifyArrays(
-        TextAnalysis.bpeApplyBatched(t(s, d, "documents"), "text",
+        TextAnalysis.bpeApply(t(s, d, "documents"), "text",
           "doc_id", rounds = 10, batch = 8))
         .orderBy("doc_id")
     }),
@@ -1768,8 +1769,8 @@ object LlmQueries {
     // dominance-disjoint fit, tokens are lowercase hex runs
     "bpe_bytes_apply" -> ((s, d) => {
       Canon.stringifyArrays(
-        TextAnalysis.bpeBytesApply(t(s, d, "documents"), "text",
-          "doc_id", rounds = 10, batch = 8))
+        TextAnalysis.bpeApply(t(s, d, "documents"), "text",
+          "doc_id", rounds = 10, batch = 8, byteGrain = true))
         .orderBy("doc_id")
     }),
     // byte-vs-char fertility contrast (round-19): the PRODUCTION
@@ -1797,11 +1798,10 @@ object LlmQueries {
           "WHEN doc_id % 3 = 2 THEN 'homoglyph' " +
           "ELSE 'ascii' END").as("slice"))
       val fitSlice = planted.filter(col("doc_id") % 3 === 0)
-      // ONE fused driver loop fits both grains (round 22, guide
-      // §1.2/§2.6): each round collects both top-C cuts in one job
-      // (10 collect jobs, was 2×10 overlapped), and the shared
-      // word-count frame is computed once; merge tables are
-      // bit-identical to the separate fits (spec-pinned)
+      // one fit loop for both grains: each round collects both
+      // top-C cuts in one job, and the shared word-count frame is
+      // computed once; merge tables are bit-identical to the
+      // separate fits (spec-pinned)
       val (chM, byM) = TextAnalysis.bpeFitMergesDual(fitSlice, "text",
         rounds = 10, batch = 8)
       // both grains' counts in ONE corpus pass (the query only bills
@@ -2662,8 +2662,8 @@ object LlmQueries {
     // langId projection, one tiny per-lang aggregate
     "tokenizer_fertility" -> ((s, d) => {
       val docs = t(s, d, "documents")
-      // counts-only apply (round 22) — see token_budget_cut_bpe
-      val bpe = TextAnalysis.bpeApplyBatchedCounts(docs, "text",
+      // counts-only apply — see token_budget_cut_bpe
+      val bpe = TextAnalysis.bpeApplyCounts(docs, "text",
         "doc_id", rounds = 10, batch = 8)
         .select(col("doc_id"), col("n_bpe_tokens"))
       TextAnalysis.withLangId(
@@ -4241,7 +4241,7 @@ object LlmQueries {
   private val duckNTokens =
     "len(string_split_regex(trim(text), '\\s+'))"
 
-  /** Replays [[TextAnalysis.bpeApply]]'s deterministic merge chain as
+  /** Replays [[TextAnalysis.bpeApply]]'s `batch = 1` merge chain as
     * generated CTE stages: `w0` = the word-frequency table as spaced
     * symbol strings, `w$i` = after merge round i (MATERIALIZED — each
     * stage is read twice and inlined CTEs would re-evaluate the chain
@@ -4285,7 +4285,7 @@ object LlmQueries {
        |    FROM documents))""".stripMargin
   }
 
-  /** Replays [[TextAnalysis.bpeApplyBatched]]'s batched merge rounds:
+  /** Replays [[TextAnalysis.bpeApply]]'s batched merge rounds:
     * per round, `bp$r` = pair counts, `bc$r` = ranked top-4·batch
     * candidates, `bs$r` = dominance-disjoint survivors (NOT EXISTS a
     * higher-ranked candidate sharing a symbol) capped at `batch`,
@@ -4303,7 +4303,7 @@ object LlmQueries {
     // char grain: one symbol per character; byte grain: one lowercase
     // two-hex-digit literal per UTF-8 byte (hex(encode(..)) is
     // uppercase hex of the UTF-8 blob in BOTH engines) — the
-    // [[TextAnalysis.bpeFitVocab]] seed, mirrored
+    // [[TextAnalysis.bpeSeed]], mirrored
     val seed =
       if (byteSeed)
         "' ' || regexp_replace(lower(hex(encode(word))), " +

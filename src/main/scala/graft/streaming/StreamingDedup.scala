@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.llm.{Dedup, TextAnalysis}
+import graft.llm.{Dedup, PolyHashColumns, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -511,14 +511,15 @@ object StreamingDedup {
     tokenizerStageImpl(docs, text, merges, byteGrain = false)
 
   /** Byte-grain twin of [[tokenizerStage]]: apply an already-fitted
-    * BYTE-level merge table ([[TextAnalysis.bpeBytesFitMerges]]) to a
-    * live feed — the same row-local join-free fold over two-hex-digit
-    * UTF-8 byte seed symbols, so live documents in scripts the fit
+    * BYTE-level merge table ([[TextAnalysis.bpeFitMerges]] with
+    * `byteGrain = true`) to a live feed — the same row-local
+    * join-free fold over two-hex-digit UTF-8 byte seed symbols
+    * ([[TextAnalysis.bpeSeed]]), so live documents in scripts the fit
     * corpus never saw still tokenize (byte fallback: unseen bytes
     * surface as one-byte tokens instead of killing the stream with
     * UNKs). Zero state, any output mode; token sequences are
-    * bit-identical to the batch [[TextAnalysis
-    * .bpeBytesApplyWithMerges]] on the same rows (spec-pinned).
+    * bit-identical to the batch [[TextAnalysis.bpeApplyWithMerges]]
+    * on the same rows (spec-pinned).
     */
   def tokenizerBytesStage(docs: DataFrame, text: String,
       merges: Seq[TextAnalysis.BpeMerge]): DataFrame =
@@ -532,25 +533,14 @@ object StreamingDedup {
     require(clash.isEmpty,
       s"tokenizerStage: input already contains column(s) " +
         s"${clash.mkString(", ")}")
-    val seed =
-      if (byteGrain)
-        "concat(' ', regexp_replace(lower(hex(encode(w, 'UTF-8'))), " +
-          "'(..)', '$1 '))"
-      else "concat(' ', regexp_replace(w, '([^ ])', '$1 '))"
     docs
       .withColumn("__bpe_ms", typedlit(merges))
       .withColumn("__bpe_words", expr(
         s"filter(split(lower($text), ' '), t -> t != '')"))
-      .withColumn("bpe_tokens", flatten(expr(
-        s"""transform(__bpe_words, w -> filter(split(
-             aggregate(__bpe_ms,
-               $seed,
-               (acc, m) -> replace(
-                 replace(
-                   replace(acc, ' ', '  '),
-                   concat(' ', m.a, '  ', m.b, ' '),
-                   concat(' ', m.a, m.b, ' ')),
-                 '  ', ' ')), ' '), x -> x != ''))""")))
+      .withColumn("bpe_tokens", flatten(transform(col("__bpe_words"),
+        w => filter(split(PolyHashColumns.bpeFold(
+          TextAnalysis.bpeSeed(w, byteGrain), col("__bpe_ms")), " "),
+          _ =!= ""))))
       .withColumn("n_bpe_tokens",
         size(col("bpe_tokens")).cast("long"))
       .drop("__bpe_ms", "__bpe_words")

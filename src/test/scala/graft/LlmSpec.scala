@@ -496,7 +496,8 @@ class LlmSpec extends AnyFunSuite {
     // gives [aa,a,b], NOT [a,aa,b]. round 2: (aa,a) and (a,b) tie
     // at 3 -> pair-ascending picks (a,b), so [aa,a,b] -> [aa,ab]
     val out = TextAnalysis.bpeApply(
-      docs("aaab aaab ab", "aaa x"), "text", "doc_id", numMerges = 2)
+      docs("aaab aaab ab", "aaa x"), "text", "doc_id",
+      rounds = 2, batch = 1)
       .orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getLong(1),
         r.getSeq[String](2).mkString(",")))
@@ -505,12 +506,12 @@ class LlmSpec extends AnyFunSuite {
       (1L, 3L, "aa,a,x")))
     // zero merges = plain character tokenization
     val raw = TextAnalysis.bpeApply(
-      docs("ab c"), "text", "doc_id", numMerges = 0)
+      docs("ab c"), "text", "doc_id", rounds = 0, batch = 1)
       .collect().map(r => (r.getLong(1), r.getSeq[String](2)))
     assert(raw === Array((3L, Seq("a", "b", "c"))))
     // tokenCounts hook: packSequences accounts with BPE counts
     val d = docs("aaab aaab ab", "aaa x")
-    val withN = d.join(TextAnalysis.bpeApply(d, "text", "doc_id", 2)
+    val withN = d.join(TextAnalysis.bpeApply(d, "text", "doc_id", 2, 1)
       .select(col("doc_id"), col("n_bpe_tokens")), Seq("doc_id"))
     val packed = TextAnalysis.packSequences(withN, "text", "doc_id",
       seqLen = 4, nShards = 1,
@@ -524,28 +525,30 @@ class LlmSpec extends AnyFunSuite {
       "dominance defers symbol-sharing pairs") {
     // batch=1 keeps only the rank-1 candidate per round — one merge
     // per round with the same (count desc, a asc, b asc) tie-break —
-    // so rounds=N, batch=1 must reproduce bpeApply(numMerges=N)
-    // exactly on any corpus
+    // so rounds=N, batch=1 is greedy BPE with N merges. Expected:
+    // the output of the former dedicated one-merge-per-round fit
+    // (numMerges = 4) on this corpus
     val corpus = docs("aaab aaab ab", "aaa x", "banana band bandana")
     def dump(df: org.apache.spark.sql.DataFrame) =
       df.orderBy("doc_id").collect()
         .map(r => (r.getLong(0), r.getLong(1),
           r.getSeq[String](2).mkString(",")))
-    assert(dump(TextAnalysis.bpeApplyBatched(corpus, "text", "doc_id",
-        rounds = 4, batch = 1)) ===
-      dump(TextAnalysis.bpeApply(corpus, "text", "doc_id",
-        numMerges = 4)))
+    assert(dump(TextAnalysis.bpeApply(corpus, "text", "doc_id",
+        rounds = 4, batch = 1)) === Array(
+      (0L, 5L, "aa,ab,aa,ab,ab"),
+      (1L, 3L, "aa,a,x"),
+      (2L, 9L, "ban,an,a,ban,d,ban,d,an,a")))
     // deferral: pair counts (a,b)=5 > (d,e)=4 > (b,c)=3. (b,c)
     // shares 'b' with the rank-1 candidate, so with batch=2 round 1
     // merges ab and de but DEFERS bc even though the batch has room
     val d2 = docs("abc abc abc ab ab de de de de")
-    val one = dump(TextAnalysis.bpeApplyBatched(d2, "text", "doc_id",
+    val one = dump(TextAnalysis.bpeApply(d2, "text", "doc_id",
       rounds = 1, batch = 2))
     assert(one === Array((0L,
       12L, "ab,c,ab,c,ab,c,ab,ab,de,de,de,de")))
     // ...and the deferred pair merges in the NEXT round: after round
     // 1 the only remaining adjacency is (ab,c), so round 2 fuses it
-    val two = dump(TextAnalysis.bpeApplyBatched(d2, "text", "doc_id",
+    val two = dump(TextAnalysis.bpeApply(d2, "text", "doc_id",
       rounds = 2, batch = 2))
     assert(two === Array((0L,
       9L, "abc,abc,abc,ab,ab,de,de,de,de")))
@@ -555,16 +558,16 @@ class LlmSpec extends AnyFunSuite {
     // deferred pair is delayed, never lost, and the batched vocab
     // equals the greedy vocab exactly
     assert(two === dump(TextAnalysis.bpeApply(d2, "text", "doc_id",
-      numMerges = 3)))
+      rounds = 3, batch = 1)))
     // ...and run to exhaustion on a corpus dense in symbol-sharing
     // pairs (every candidate round has overlaps to defer): both
     // tokenizers fully fuse every word to a single token — dominance
     // deferral starves no pair permanently
     val d3 = docs("banana band bandana", "ban banana bandana band")
-    val exhaustB = dump(TextAnalysis.bpeApplyBatched(
+    val exhaustB = dump(TextAnalysis.bpeApply(
       d3, "text", "doc_id", rounds = 8, batch = 3))
     val exhaustG = dump(TextAnalysis.bpeApply(
-      d3, "text", "doc_id", numMerges = 24))
+      d3, "text", "doc_id", rounds = 24, batch = 1))
     assert(exhaustB === exhaustG)
     assert(exhaustB.forall { case (_, _, toks) =>
       toks.split(",").forall(t => !t.contains(" ")) })
@@ -2959,8 +2962,8 @@ class LlmSpec extends AnyFunSuite {
     // corpus merges first; tokens are lowercase hex runs
     val df = Seq((1L, "hello hello"), (2L, "help"))
       .toDF("doc_id", "text")
-    val out = TextAnalysis.bpeBytesApply(df, "text", "doc_id",
-        rounds = 1, batch = 1)
+    val out = TextAnalysis.bpeApply(df, "text", "doc_id",
+        rounds = 1, batch = 1, byteGrain = true)
       .orderBy("doc_id").collect()
       .map(r => (r.getLong(0), r.getSeq[String](2)))
     // pair counts over byte symbols: (68,65)=3, (65,6c)=3, (6c,6c)=2,
@@ -2976,10 +2979,10 @@ class LlmSpec extends AnyFunSuite {
     // COUNT everywhere (symbols map 1:1, merges fuse in lockstep)
     val ascii = Seq((1L, "alpha beta alpha"), (2L, "beta gamma"),
       (3L, "alpha gamma delta")).toDF("doc_id", "text")
-    val nb = TextAnalysis.bpeBytesApply(ascii, "text", "doc_id",
-        rounds = 5, batch = 4)
+    val nb = TextAnalysis.bpeApply(ascii, "text", "doc_id",
+        rounds = 5, batch = 4, byteGrain = true)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val nc = TextAnalysis.bpeApplyBatched(ascii, "text", "doc_id",
+    val nc = TextAnalysis.bpeApply(ascii, "text", "doc_id",
         rounds = 5, batch = 4)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(nb === nc)
@@ -2990,15 +2993,15 @@ class LlmSpec extends AnyFunSuite {
     import graft.llm.TextAnalysis
     val fit = Seq((1L, "hello hello help"))
       .toDF("doc_id", "text")
-    val merges = TextAnalysis.bpeBytesFitMerges(fit, "text",
-      rounds = 10, batch = 8)
+    val merges = TextAnalysis.bpeFitMerges(fit, "text",
+      rounds = 10, batch = 8, byteGrain = true)
     assert(merges.nonEmpty)
     // 'héllo': é = c3 a9 — bytes the fit corpus never saw, so no
     // merge touches them; they fall back as TWO one-byte tokens
     // where a char-grain tokenizer would emit one 'é' seed symbol
     val apply = Seq((1L, "héllo")).toDF("doc_id", "text")
-    val toks = TextAnalysis.bpeBytesApplyWithMerges(apply, "text",
-        "doc_id", merges)
+    val toks = TextAnalysis.bpeApplyWithMerges(apply, "text",
+        "doc_id", merges, byteGrain = true)
       .collect()(0).getSeq[String](2)
     assert(toks.count(t => t == "c3") === 1)
     assert(toks.count(t => t == "a9") === 1)

@@ -2,6 +2,8 @@ package graft
 
 import graft.engine.{Dist, Guard, Pin}
 import graft.llm.{Similarity, TextAnalysis}
+import org.apache.spark.graftglue.ListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -13,15 +15,16 @@ import org.scalatest.funsuite.AnyFunSuite
   * (still present for the token-emitting paths) or a driver-side
   * replay:
   *
-  * - counts-only BPE applies ([[TextAnalysis.bpeApplyCounts]] /
-  *   [[TextAnalysis.bpeApplyBatchedCounts]]) vs the token-emitting
-  *   applies they shortcut;
-  * - the fused dual-grain fit ([[TextAnalysis.bpeFitMergesDual]]) vs
+  * - the counts-only BPE apply ([[TextAnalysis.bpeApplyCounts]]) vs
+  *   the token-emitting [[TextAnalysis.bpeApply]] it shortcuts;
+  * - the dual-grain fit ([[TextAnalysis.bpeFitMergesDual]]) vs
   *   the two single-grain fits, including the UTF-8-vs-UTF-16 order
   *   divergence its driver-side replay must get right and the
   *   one-grain-exhausts-first edge;
   * - the dual counts apply ([[TextAnalysis.bpeTokenCountsDual]]) vs
   *   the two WithMerges applies joined;
+  * - the BPE fit's job counts (one collect per round; the word-count
+  *   frame pinned eagerly only when two grains read it);
   * - [[Similarity.bruteForceTopK]]'s in-plan query-cardinality guard
   *   (results unchanged under the bound, loud raise over it);
   * - [[Guard.boundedCollect]] (all rows under the bound, raise with
@@ -54,20 +57,20 @@ class OptimizeR22Spec extends AnyFunSuite {
   test("bpeApplyCounts == bpeApply on (doc_id, n_bpe_tokens), " +
       "including zero-token-doc exclusion") {
     for (c <- corpora; m <- Seq(0, 2, 10)) {
-      val tok = countsOf(
-        TextAnalysis.bpeApply(c, "text", "doc_id", numMerges = m))
-      val cnt = countsOf(
-        TextAnalysis.bpeApplyCounts(c, "text", "doc_id", numMerges = m))
-      assert(cnt === tok, s"numMerges=$m corpus=$c")
+      val tok = countsOf(TextAnalysis.bpeApply(c, "text", "doc_id",
+        rounds = m, batch = 1))
+      val cnt = countsOf(TextAnalysis.bpeApplyCounts(c, "text",
+        "doc_id", rounds = m, batch = 1))
+      assert(cnt === tok, s"rounds=$m batch=1 corpus=$c")
     }
   }
 
   test("bpeApplyBatchedCounts == bpeApplyBatched on " +
       "(doc_id, n_bpe_tokens)") {
     for (c <- corpora; (r, b) <- Seq((1, 2), (10, 8))) {
-      val tok = countsOf(TextAnalysis.bpeApplyBatched(
+      val tok = countsOf(TextAnalysis.bpeApply(
         c, "text", "doc_id", rounds = r, batch = b))
-      val cnt = countsOf(TextAnalysis.bpeApplyBatchedCounts(
+      val cnt = countsOf(TextAnalysis.bpeApplyCounts(
         c, "text", "doc_id", rounds = r, batch = b))
       assert(cnt === tok, s"rounds=$r batch=$b corpus=$c")
     }
@@ -80,8 +83,8 @@ class OptimizeR22Spec extends AnyFunSuite {
         c, "text", rounds = r, batch = b)
       assert(chD === TextAnalysis.bpeFitMerges(
         c, "text", rounds = r, batch = b), s"char r=$r b=$b $c")
-      assert(byD === TextAnalysis.bpeBytesFitMerges(
-        c, "text", rounds = r, batch = b), s"byte r=$r b=$b $c")
+      assert(byD === TextAnalysis.bpeFitMerges(c, "text",
+        rounds = r, batch = b, byteGrain = true), s"byte r=$r b=$b $c")
     }
   }
 
@@ -110,8 +113,8 @@ class OptimizeR22Spec extends AnyFunSuite {
       c, "text", rounds = 4, batch = 2)
     assert(chD === TextAnalysis.bpeFitMerges(
       c, "text", rounds = 4, batch = 2))
-    assert(byD === TextAnalysis.bpeBytesFitMerges(
-      c, "text", rounds = 4, batch = 2))
+    assert(byD === TextAnalysis.bpeFitMerges(
+      c, "text", rounds = 4, batch = 2, byteGrain = true))
     assert(chD.isEmpty && byD.nonEmpty)
   }
 
@@ -120,21 +123,61 @@ class OptimizeR22Spec extends AnyFunSuite {
     val fit = c.filter(col("doc_id") === 0L)
     val chM = TextAnalysis.bpeFitMerges(fit, "text",
       rounds = 10, batch = 8)
-    val byM = TextAnalysis.bpeBytesFitMerges(fit, "text",
-      rounds = 10, batch = 8)
+    val byM = TextAnalysis.bpeFitMerges(fit, "text",
+      rounds = 10, batch = 8, byteGrain = true)
     val dual = TextAnalysis.bpeTokenCountsDual(
       c, "text", "doc_id", chM, byM)
       .collect().map(r => (r.getLong(0),
         r.getLong(1), r.getLong(2))).sortBy(_._1)
     val ch = TextAnalysis.bpeApplyWithMerges(c, "text", "doc_id", chM)
       .select("doc_id", "n_bpe_tokens")
-    val by = TextAnalysis.bpeBytesApplyWithMerges(
-      c, "text", "doc_id", byM).select("doc_id", "n_bpe_tokens")
+    val by = TextAnalysis.bpeApplyWithMerges(
+      c, "text", "doc_id", byM, byteGrain = true)
+      .select("doc_id", "n_bpe_tokens")
     val joined = ch.withColumnRenamed("n_bpe_tokens", "nc")
       .join(by.withColumnRenamed("n_bpe_tokens", "nb"), Seq("doc_id"))
       .collect().map(r => (r.getLong(0),
         r.getLong(1), r.getLong(2))).sortBy(_._1)
     assert(dual === joined)
+  }
+
+  // Spark jobs started under one job group while `body` builds and
+  // runs its frames (the BPE fit collects while the frame is built)
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = "bpe-job-count"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "BPE job count")
+      try body finally sc.clearJobGroup()
+    } finally {
+      ListenerBus.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    jobs.get
+  }
+
+  // ceilings: the counts of the separate single-grain and dual-grain
+  // fit loops this fit replaced, measured on the same fixtures
+  test("BPE job count: a single-grain fit + counts apply runs no " +
+      "more jobs than the one-merge-per-round loop it replaced") {
+    val c = docs("aaab aaab ab", "aaa x", "banana band bandana")
+    assert(jobsOf(TextAnalysis.bpeApplyCounts(c, "text", "doc_id",
+      rounds = 10, batch = 1).collect()) <= 24)
+  }
+
+  test("BPE job count: the dual-grain fit runs no more jobs than " +
+      "the fused dual loop it replaced") {
+    for ((c, ceiling) <- corpora.zip(Seq(16, 25, 23, 19)))
+      assert(jobsOf(TextAnalysis.bpeFitMergesDual(c, "text",
+        rounds = 10, batch = 8)) <= ceiling, s"corpus=$c")
   }
 
   test("bruteForceTopK: results unchanged under the query bound; " +

@@ -106,19 +106,6 @@ class RetailSpec extends AnyFunSuite {
     assert(got === want)
   }
 
-  test("Pin.concurrently: returns both results in order and " +
-      "propagates either failure") {
-    val (a, b) = graft.engine.Pin.concurrently(
-      { Thread.sleep(10); 41 }, "x" * 3)
-    assert(a === 41 && b === "xxx")
-    val e = intercept[RuntimeException] {
-      graft.engine.Pin.concurrently(
-        { Thread.sleep(5); 1 },
-        throw new RuntimeException("boom"))
-    }
-    assert(e.getMessage === "boom")
-  }
-
   test("abcClassify bands: monotone A->B->C down the revenue ranking") {
     val li = Seq(
       // one dominant item, a mid item, a tail of small ones

@@ -904,7 +904,7 @@ class StreamingSpec extends AnyFunSuite {
       ref, "text", "doc_id", merges)
       .collect().map(r => (r.getLong(0), r.getLong(1),
         r.getSeq[String](2).mkString(","))).sortBy(_._1)
-    val batched = TextAnalysis.bpeApplyBatched(
+    val batched = TextAnalysis.bpeApply(
       ref, "text", "doc_id", rounds = 3, batch = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1),
         r.getSeq[String](2).mkString(","))).sortBy(_._1)
@@ -1023,8 +1023,8 @@ class StreamingSpec extends AnyFunSuite {
       (1L, "hello hello help"),
       (2L, "hello helm"))
     val ref = fitCorpus.toDF("doc_id", "text")
-    val merges = TextAnalysis.bpeBytesFitMerges(ref, "text",
-      rounds = 3, batch = 2)
+    val merges = TextAnalysis.bpeFitMerges(ref, "text",
+      rounds = 3, batch = 2, byteGrain = true)
     assert(merges.nonEmpty)
     // the live feed adds a zero-token doc and an out-of-fit
     // multibyte doc — the fallback case a live multilingual feed
@@ -1054,8 +1054,9 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed(3)._3.count(_ == "c3") === 1)
     assert(streamed(3)._3.count(_ == "a9") === 1)
     // bit parity with the batch byte-grain apply on content docs
-    val batch = TextAnalysis.bpeBytesApplyWithMerges(
-        live.toDF("doc_id", "text"), "text", "doc_id", merges)
+    val batch = TextAnalysis.bpeApplyWithMerges(
+        live.toDF("doc_id", "text"), "text", "doc_id", merges,
+        byteGrain = true)
       .collect().map(r => (r.getLong(0), r.getLong(1),
         r.getSeq[String](2))).sortBy(_._1)
     assert(streamed.filter(_._1 != 3L).toSeq === batch.toSeq)
