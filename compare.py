@@ -102,9 +102,12 @@ def canon(df):
     return df
 
 fails = []
-for name, sql in sorted(oracles.items()):
-    if only and name not in only:
-        continue
+# a requested name without an oracle is a failure, never a silent skip
+for name in sorted(only - oracles.keys()):
+    print(f"FAIL {name}: no oracle"); fails.append(name)
+judged = [n for n in sorted(oracles) if not only or n in only]
+for name in judged:
+    sql = oracles[name]
     bad_types = dtype_audit(con, name, sql)
     if bad_types:
         print(f"FAIL {name}: unsafe oracle output dtype(s) {bad_types} — "
@@ -237,5 +240,6 @@ for name, sql in sorted(oracles.items()):
     else:
         print(f"ok   {name} ({len(a)} rows)")
 
-print(f"\n{len(oracles) - len(fails)}/{len(oracles) if not only else len(only)} ok; failures: {fails}")
+total = len(judged) + len(only - oracles.keys())
+print(f"\n{total - len(fails)}/{total} ok; failures: {fails}")
 sys.exit(1 if fails else 0)

@@ -522,28 +522,26 @@ object BpeFold {
     * string: `replace(replace(replace(s, " ", "  "), " a  b ",
     * " ab "), "  ", " ")`. Literal, non-overlapping, left-to-right
     * replacement in every engine (Java String.replace, Spark
-    * StringReplace, DuckDB replace) — the native loop is
-    * string-identical to the SQL HOF fold the oracles replay, just
-    * compiled: the HOF walks an interpreted lambda per merge with
-    * three fresh column-expression evaluations per step, which made
-    * the fold the dominant cost of the BPE apply path.
+    * StringReplace, DuckDB replace), so this loop is string-identical
+    * to the SQL HOF fold the oracles replay, but compiled (the HOF
+    * walks an interpreted lambda per merge). The executor expression
+    * ([[compute]]) and the driver-side BPE fit both run it.
     */
-  def compute(repr: UTF8String,
-      ms: org.apache.spark.sql.catalyst.util.ArrayData): UTF8String = {
-    var s = repr.toString
-    val n = ms.numElements()
-    var i = 0
-    while (i < n) {
-      val m = ms.getStruct(i, 2)
-      val a = m.getUTF8String(0).toString
-      val b = m.getUTF8String(1).toString
-      s = s.replace(" ", "  ")
+  def fold(repr: String, ms: Seq[(String, String)]): String =
+    ms.foldLeft(repr) { case (s, (a, b)) =>
+      s.replace(" ", "  ")
         .replace(" " + a + "  " + b + " ", " " + a + b + " ")
         .replace("  ", " ")
-      i += 1
     }
-    UTF8String.fromString(s)
-  }
+
+  /** [[fold]] over an array<struct<a:string,b:string>> of rules. */
+  def compute(repr: UTF8String,
+      ms: org.apache.spark.sql.catalyst.util.ArrayData): UTF8String =
+    UTF8String.fromString(fold(repr.toString,
+      Seq.tabulate(ms.numElements()) { i =>
+        val m = ms.getStruct(i, 2)
+        (m.getUTF8String(0).toString, m.getUTF8String(1).toString)
+      }))
 }
 
 /** string BPE merge fold of a space-delimited symbol string over an

@@ -1788,13 +1788,16 @@ object TextAnalysis {
     * right, so one fold over all rounds' merges equals folding round
     * by round.
     *
-    * Each fit round counts adjacent pairs once (weighted by word
-    * count) and takes up to `batch` merges from the top `4·batch`
-    * pairs by (count desc, a asc, b asc). The dominance-disjoint
-    * rule: a candidate survives iff no higher-ranked candidate, kept
-    * or not, shares a symbol with it. Survivors are pairwise
-    * symbol-disjoint and disjoint merges commute, so applying them in
-    * rank order is faithful greedy BPE; `batch = 1` is the classic
+    * The fit collects the corpus's distinct-word count table once
+    * (one bounded collect, at most 4,000,000 distinct words) and runs
+    * every round on the driver. A round counts adjacent pairs
+    * (weighted by word count) and takes up to `batch` merges from the
+    * top `4·batch` pairs by (count desc, a asc, b asc), strings in
+    * UTF-8 byte order. The dominance-disjoint rule: a candidate
+    * survives iff no higher-ranked candidate, kept or not, shares a
+    * symbol with it. Survivors are pairwise symbol-disjoint and
+    * disjoint merges commute, so applying them in rank order is
+    * faithful greedy BPE; `batch = 1` is the classic
     * one-merge-per-round fit. A grain with no mergeable pair left
     * stops early, so `rounds · batch` bounds the table size.
     *
@@ -1830,8 +1833,8 @@ object TextAnalysis {
     bpeFit(df, text, rounds, batch, Seq(byteGrain))._2.head
 
   /** The char-grain and byte-grain merge tables of one corpus, equal
-    * to the two [[bpeFitMerges]] calls at a shared word count and one
-    * collect per round.
+    * to the two [[bpeFitMerges]] calls, from one shared word-count
+    * collect.
     */
   def bpeFitMergesDual(df: DataFrame, text: String, rounds: Int,
       batch: Int): (Seq[BpeMerge], Seq[BpeMerge]) = {
@@ -1874,78 +1877,75 @@ object TextAnalysis {
   private def bpeDistinctWords(df: DataFrame, text: String): DataFrame =
     df.select(explode(bpeWords(text)).as("word")).distinct()
 
-  /** The fit loop: one merge table per grain of `grains`
-    * (`byteGrain` flags) over one shared word-count frame. Each round
-    * is ONE collect of every live grain's top-`4·batch` cut (a union
-    * when more than one grain is live). The cut's order is strict
-    * and total, so the driver recovers it per grain with [[u8Less]]
-    * and then runs the dominance prefix scan.
+  /** The fit: one merge table per grain of `grains` (`byteGrain`
+    * flags). One distributed pass computes (word, cnt, one seed per
+    * grain) and collects it through [[graft.engine.Guard.boundedCollect]]
+    * (at most 4,000,000 distinct words, raising with the site name
+    * over it); every round then runs on the driver ([[bpeRounds]]).
+    * `rounds = 0` starts no job.
     *
-    * Vocabularies are lazy checkpoints: each has strictly sequential
-    * consumers (the next round's collect materializes it, the rewrite
-    * then reads the cached blocks), so lineage is cut per round at no
-    * extra job. The word-count frame is pinned EAGERLY only when two
-    * or more grains read it: their round-1 pair aggregates are
-    * sibling stages of one job and would race to materialize a lazy
-    * pin.
-    *
-    * Returns the distinct words (the first grain's seed vocabulary,
-    * materialized by round 1) and each grain's merges.
+    * Returns the distinct words (a local relation of the collected
+    * words; lazy over `df` when nothing was collected) and each
+    * grain's merges.
     */
   private def bpeFit(df: DataFrame, text: String, rounds: Int,
       batch: Int, grains: Seq[Boolean])
       : (DataFrame, Seq[Seq[BpeMerge]]) = {
     require(rounds >= 0 && batch >= 1, "need rounds >= 0, batch >= 1")
-    val counted = df.select(explode(bpeWords(text)).as("word"))
-      .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
-    val words =
-      if (grains.size > 1) counted.localCheckpoint() else counted
-    val seeds = grains.map(g => words
-      .withColumn("repr", bpeSeed(col("word"), g))
-      .localCheckpoint(eager = false))
-    val vocab = seeds.toArray
-    val fitted = Array.fill(grains.size)(Vector.empty[BpeMerge])
-    val live = Array.fill(grains.size)(true)
+    if (rounds == 0)
+      return (bpeDistinctWords(df, text), grains.map(_ => Seq.empty))
+    val rows = graft.engine.Guard.boundedCollect(
+      df.select(explode(bpeWords(text)).as("word"))
+        .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
+        .select(col("word") +: col("cnt") +:
+          grains.map(bpeSeed(col("word"), _)): _*),
+      4000000, "bpeFit word counts")
+    val cnts = rows.map(_.getLong(1))
+    val fitted = grains.indices.map(g =>
+      bpeRounds(rows.map(_.getString(2 + g)), cnts, rounds, batch))
+    val spark = df.sparkSession
+    import spark.implicits._
+    (rows.map(_.getString(0)).toSeq.toDF("word"), fitted)
+  }
+
+  /** One grain's merge rounds over the collected seed symbol strings
+    * `reprs` and their word counts. A word with a repeated pair counts
+    * it once per position. Ranks by (count desc, a, b) in UTF-8 byte
+    * order ([[u8Less]]), cuts to the top `4·batch`, then keeps each
+    * candidate no higher-ranked one shares a symbol with.
+    */
+  private def bpeRounds(reprs: Array[String], cnts: Array[Long],
+      rounds: Int, batch: Int): Seq[BpeMerge] = {
+    val fitted = Vector.newBuilder[BpeMerge]
     var round = 0
-    while (round < rounds && live.contains(true)) {
-      val rows = grains.indices.filter(live).map(g => vocab(g)
-          .select(col("cnt"),
-            filter(split(col("repr"), " "), _ =!= "").as("__t"))
-          .filter(size(col("__t")) >= 2)
-          .select(col("cnt"), explode(expr(
-            """transform(sequence(1, size(__t) - 1),
-               i -> struct(element_at(__t, i) AS a,
-                           element_at(__t, i + 1) AS b))""")).as("__p"))
-          .groupBy(col("__p.a").as("a"), col("__p.b").as("b"))
-          .agg(sum(col("cnt")).as("__c"))
-          .orderBy(col("__c").desc, col("a").asc, col("b").asc)
-          .limit(4 * batch)
-          .select(lit(g).as("__g"), col("a"), col("b"), col("__c")))
-        .reduce(_.unionByName(_))
-        .collect()
-      for (g <- grains.indices if live(g)) {
-        val top = rows.filter(_.getInt(0) == g)
-          .map(r => (r.getString(1), r.getString(2), r.getLong(3)))
-          .sortWith { case ((a1, b1, c1), (a2, b2, c2)) =>
-            c1 > c2 || (c1 == c2 && (u8Less(a1, a2) ||
-              (a1 == a2 && u8Less(b1, b2)))) }
-        val ms: Seq[BpeMerge] = top.zipWithIndex.collect {
-          case ((a, b, _), i) if !top.take(i).exists { case (ja, jb, _) =>
-              ja == a || ja == b || jb == a || jb == b } => BpeMerge(a, b)
-        }.take(batch).toSeq
-        if (ms.isEmpty) live(g) = false
-        else {
-          fitted(g) ++= ms
-          if (round + 1 < rounds) // the last rewrite would go unread
-            vocab(g) = vocab(g)
-              .withColumn("repr", PolyHashColumns.bpeFold(col("repr"),
-                typedlit(ms)))
-              .localCheckpoint(eager = false)
+    var live = true
+    while (round < rounds && live) {
+      val pairs =
+        scala.collection.mutable.HashMap.empty[(String, String), Long]
+      for (i <- reprs.indices) {
+        val t = reprs(i).split(" ").filter(_.nonEmpty)
+        for (j <- 1 until t.length) {
+          val p = (t(j - 1), t(j))
+          pairs(p) = pairs.getOrElse(p, 0L) + cnts(i)
         }
+      }
+      val top = pairs.toSeq
+        .sortWith { case (((a1, b1), c1), ((a2, b2), c2)) =>
+          c1 > c2 || (c1 == c2 && (u8Less(a1, a2) ||
+            (a1 == a2 && u8Less(b1, b2)))) }
+        .take(4 * batch).map(_._1)
+      val ms = top.zipWithIndex.collect {
+        case ((a, b), i) if !top.take(i).exists { case (ja, jb) =>
+            ja == a || ja == b || jb == a || jb == b } => (a, b)
+      }.take(batch)
+      if (ms.isEmpty) live = false
+      else {
+        fitted ++= ms.map { case (a, b) => BpeMerge(a, b) }
+        for (i <- reprs.indices) reprs(i) = BpeFold.fold(reprs(i), ms)
       }
       round += 1
     }
-    (seeds.head.select(col("word")), fitted.toSeq)
+    fitted.result()
   }
 
   /** A distinct word's tokens under one grain's merge table. */

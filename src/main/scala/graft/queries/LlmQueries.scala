@@ -1753,8 +1753,7 @@ object LlmQueries {
         .orderBy("doc_id")
     }),
     // batched BPE fit: up to 8 dominance-disjoint merges per round,
-    // 10 rounds — the scale path (one pair aggregate per ROUND, not
-    // per merge); oracle replays the identical per-round selection
+    // 10 rounds; oracle replays the identical per-round selection
     // and fold
     "bpe_apply_batched" -> ((s, d) => {
       Canon.stringifyArrays(

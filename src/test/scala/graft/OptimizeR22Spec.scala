@@ -1,7 +1,7 @@
 package graft
 
 import graft.engine.{Dist, Guard, Pin}
-import graft.llm.{Similarity, TextAnalysis}
+import graft.llm.{BpeFitReference, Similarity, TextAnalysis}
 import org.apache.spark.graftglue.ListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
@@ -23,8 +23,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *   one-grain-exhausts-first edge;
   * - the dual counts apply ([[TextAnalysis.bpeTokenCountsDual]]) vs
   *   the two WithMerges applies joined;
-  * - the BPE fit's job counts (one collect per round; the word-count
-  *   frame pinned eagerly only when two grains read it);
+  * - the BPE fit against the per-round distributed fit it replaced
+  *   ([[graft.llm.BpeFitReference]]): bit-identical merge tables;
+  * - the BPE fit's job counts (one bounded collect of the word-count
+  *   table, at most 4,000,000 distinct words; every round on the
+  *   driver; no job when nothing is fitted);
   * - [[Similarity.bruteForceTopK]]'s in-plan query-cardinality guard
   *   (results unchanged under the bound, loud raise over it);
   * - [[Guard.boundedCollect]] (all rows under the bound, raise with
@@ -141,6 +144,26 @@ class OptimizeR22Spec extends AnyFunSuite {
     assert(dual === joined)
   }
 
+  test("bpeFit == the per-round distributed fit it replaced: merge " +
+      "tables bit-identical at both grains and dual") {
+    val fixtures = corpora ++ Seq(docs("😀a 😀a ￮b ￮b"),
+      docs("é é ñ", "é ñ ñ"))
+    for (c <- fixtures;
+         (r, b) <- Seq((0, 1), (1, 1), (3, 2), (10, 1), (10, 8))) {
+      val at = s"rounds=$r batch=$b corpus=$c"
+      val refCh = BpeFitReference.fit(c, "text", r, b, Seq(false)).head
+      val refBy = BpeFitReference.fit(c, "text", r, b, Seq(true)).head
+      assert(TextAnalysis.bpeFitMerges(c, "text", rounds = r,
+        batch = b) === refCh, s"char $at")
+      assert(TextAnalysis.bpeFitMerges(c, "text", rounds = r,
+        batch = b, byteGrain = true) === refBy, s"byte $at")
+      val refDual = BpeFitReference.fit(c, "text", r, b,
+        Seq(false, true))
+      assert(TextAnalysis.bpeFitMergesDual(c, "text", rounds = r,
+        batch = b) === ((refDual(0), refDual(1))), s"dual $at")
+    }
+  }
+
   // Spark jobs started under one job group while `body` builds and
   // runs its frames (the BPE fit collects while the frame is built)
   private def jobsOf(body: => Unit): Int = {
@@ -178,6 +201,25 @@ class OptimizeR22Spec extends AnyFunSuite {
     for ((c, ceiling) <- corpora.zip(Seq(16, 25, 23, 19)))
       assert(jobsOf(TextAnalysis.bpeFitMergesDual(c, "text",
         rounds = 10, batch = 8)) <= ceiling, s"corpus=$c")
+  }
+
+  test("BPE job count: the one-collect fit + counts apply runs at " +
+      "most 5 jobs") {
+    val c = docs("aaab aaab ab", "aaa x", "banana band bandana")
+    assert(jobsOf(TextAnalysis.bpeApplyCounts(c, "text", "doc_id",
+      rounds = 10, batch = 1).collect()) <= 5)
+  }
+
+  test("BPE job count: the one-collect dual-grain fit runs at most " +
+      "2 jobs") {
+    for (c <- corpora)
+      assert(jobsOf(TextAnalysis.bpeFitMergesDual(c, "text",
+        rounds = 10, batch = 8)) <= 2, s"corpus=$c")
+  }
+
+  test("BPE job count: a fit of 0 rounds starts no job") {
+    assert(jobsOf(TextAnalysis.bpeFitMerges(corpora(1), "text",
+      rounds = 0, batch = 1)) === 0)
   }
 
   test("bruteForceTopK: results unchanged under the query bound; " +
