@@ -15,10 +15,12 @@ import org.apache.spark.sql.functions._
   *      (word n-gram overlap);
   *   4. context-window chunking of the surviving documents.
   *
-  * Scale shape: stages 1-2 are one shuffle each (content hash;
-  * nothing for the narrow stats), stage 3 is the gram semi/anti join
-  * pair, stage 4 is a narrow explode. No stage ever compares
-  * documents pairwise or materializes on the driver.
+  * Scale shape: stage 1 is one shuffle on the text, stage 2 is
+  * narrow, stage 3 is one bounded collect of the eval corpus's
+  * distinct n-grams ([[Dedup.evalGramSet]]) and a row-local probe of
+  * each document's own grams ([[Dedup.withExactContaminationFlag]]),
+  * stage 4 is a narrow explode. No stage compares documents pairwise;
+  * only the eval n-gram set is collected.
   */
 object CurationJob {
 
@@ -36,8 +38,10 @@ object CurationJob {
       .filter(col("quality") >= minQuality && col("pred_lang") === lang)
       .select(col(id), col(text))
     val clean = evalSet.fold(kept)(ev =>
-      kept.join(Dedup.contaminatedIds(kept, ev, text, id), Seq(id),
-        "left_anti"))
+      Dedup.withExactContaminationFlag(kept, text,
+          Dedup.evalGramSet(ev, text))
+        .filter(!col("contaminated"))
+        .select(col(id), col(text)))
     TextAnalysis.chunkDocuments(clean, text, id, chunkSize, overlap)
   }
 
@@ -52,9 +56,10 @@ object CurationJob {
     * `sum(__n)` docs and `sum(__n · tokens)` tokens — exact, since the
     * same text always has the same token count — and stages 2-5 are
     * predicate prefixes over that frame (true, quality, quality ∧
-    * lang, and ∧ not contaminated). Contaminated groups are flagged by
-    * a left join against [[Dedup.contaminatedIds]] of the gated ones,
-    * so ids are assumed unique and non-null.
+    * lang, and ∧ not contaminated). The contamination flag is the
+    * row-local probe of [[curate]] (one bounded eval n-gram collect
+    * per call), evaluated only on the rows both gates keep; it is per
+    * row, not per id, so no join and no id assumption is involved.
     */
   def funnel(docs: DataFrame, text: String, id: String,
       minQuality: Double = 0.5, lang: String = "en",
@@ -66,9 +71,9 @@ object CurationJob {
     val kept = quality && col("pred_lang") === lang
     val (g, clean) = evalSet match {
       case Some(ev) =>
-        (st.join(Dedup.contaminatedIds(st.filter(kept), ev, text, id)
-            .withColumn("__c", lit(true)), Seq(id), "left"),
-          kept && col("__c").isNull)
+        (Dedup.withExactContaminationFlag(st, text,
+            Dedup.evalGramSet(ev, text), gate = Some(kept)),
+          kept && !col("contaminated"))
       case None => (st, kept)
     }
     stageCounts(
@@ -128,8 +133,9 @@ object CurationJob {
     *   - PII: [[TextAnalysis.piiCountsExpr]] regex counts and
     *     `pii_gate` (any email/IP/phone hit — a release ships the
     *     REDACTED text or not at all);
-    *   - contamination: [[Dedup.contaminatedIds]]' word-8-gram
-    *     overlap against the evaluation corpus (`contaminated`);
+    *   - contamination: word-8-gram overlap against the evaluation
+    *     corpus (`contaminated`, [[Dedup.withExactContaminationFlag]]
+    *     per row, the eval n-grams collected once under a bound);
     *   - metadata privacy: [[TextAnalysis.kAnonymize]] over the
     *     document's quasi-identifier attributes (`is_anonymous` — a
     *     doc whose published metadata tuple cannot reach k even at
@@ -139,11 +145,13 @@ object CurationJob {
     * (id, license, copyleft_gate, n_email, n_ip, n_phone, pii_gate,
     * contaminated, is_anonymous, released).
     *
-    * Scale shape: the license and PII gates are row-local codegen
-    * scans; decontamination is the gram semi-join; k-anonymity
-    * is the bounded level ladder; the verdict join is four
-    * equi-joins on the id key (one shuffle each, or zero with a
-    * bucketed id layout). Nothing pairwise, nothing driver-side.
+    * Ids must be unique: the PII frame raises on a duplicate id.
+    *
+    * Scale shape: the license, PII and contamination gates are
+    * row-local scans (the last probes a bounded, collected set
+    * of eval n-gram hashes); k-anonymity is the bounded level ladder;
+    * the verdict join is equi-joins on the id key (one shuffle each,
+    * or zero with a bucketed id layout). Nothing pairwise.
     */
   def releaseGate(docs: DataFrame, text: String, id: String,
       markers: Seq[(String, String)],
@@ -178,11 +186,11 @@ object CurationJob {
              |ELSE __pg END""".stripMargin).as("pii_gate")): _*)
     val clean = evalSet match {
       case Some(ev) =>
-        docs.select(col(id))
-          .join(Dedup.contaminatedIds(docs, ev, text, id)
-            .withColumn("__c", lit(true)), Seq(id), "left")
+        Dedup.withExactContaminationFlag(
+            docs.select(col(id), col(text)), text,
+            Dedup.evalGramSet(ev, text))
           .select(col(id),
-            coalesce(col("__c"), lit(false)).as("contaminated"))
+            coalesce(col("contaminated"), lit(false)).as("contaminated"))
       case None =>
         docs.select(col(id), lit(false).as("contaminated"))
     }
@@ -215,8 +223,8 @@ object CurationJob {
         TextAnalysis.tokenCountExpr(text).cast("long").as("__nt")),
         Seq(id))
     // stages 2-5 are predicate prefixes over g's own boolean columns:
-    // one aggregate, so the gate DAG (AC scan, gram semi-join, ladder)
-    // runs once, not once per stage
+    // one aggregate, so the gate DAG (AC scan, PII scan, n-gram probe,
+    // ladder) runs once, not once per stage
     val one = lit(1L)
     stageCounts(g, Seq(
       ("raw", lit(true), one),

@@ -19,9 +19,11 @@ object Dist {
 
   /** Adds `out` = inclusive running total of `value` under the TOTAL
     * order `orderCols` (the caller must make it strict — include a
-    * unique tiebreaker). With `withTotal`, also attaches the grand
-    * total as column `<out>_total` (computed from the per-partition
-    * subtotals — no extra pass over the data). The ranged frame is
+    * unique tiebreaker). Null values are skipped, as by `sum`: `out`
+    * is null only while no non-null value precedes or is the row.
+    * With `withTotal`, also attaches the grand total as column
+    * `<out>_total` (computed from the per-partition subtotals — no
+    * extra pass over the data). The ranged frame is
     * locally checkpointed: subtotals, offsets, and the final window
     * all read the pinned frame instead of re-running upstream.
     */
@@ -46,13 +48,19 @@ object Dist {
         col("__ptot").as("__qtot"))), col("__qid") < col("__pid"),
         "left")
       .groupBy(col("__pid"))
-      .agg(coalesce(sum(col("__qtot")), zero).as("__offset"))
+      .agg(sum(col("__qtot")).as("__offset"))
     val local = Window.partitionBy("__pid").orderBy(orderCols: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    // either part is null when it has seen no non-null value; the
+    // total is null only when both are
     val base = ranged
       .join(broadcast(offsets.select("__pid", "__offset")), "__pid")
-      .withColumn(out, col("__offset") + sum(col(value)).over(local))
-      .drop("__pid", "__offset")
+      .withColumn("__local", sum(col(value)).over(local))
+      .withColumn(out,
+        when(col("__offset").isNull && col("__local").isNull, null)
+          .otherwise(coalesce(col("__offset"), zero) +
+            coalesce(col("__local"), zero)))
+      .drop("__pid", "__offset", "__local")
     if (!withTotal) base
     else base.crossJoin(broadcast(
       ptots.agg(sum(col("__ptot")).as(s"${out}_total"))))

@@ -1,5 +1,6 @@
 package graft.llm
 
+import graft.engine.Guard
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -598,7 +599,8 @@ object Dedup {
     * at least one word n-gram with the evaluation corpus — the
     * standard n-gram-overlap rule for scrubbing eval leakage out of
     * training data. Returns the kept train ids: train ids ⋉anti
-    * [[contaminatedIds]].
+    * [[contaminatedIds]] on the id (a null id never matches, so its
+    * rows are kept).
     */
   def decontaminate(train: DataFrame, evalSet: DataFrame, text: String,
       id: String, n: Int = 8): DataFrame =
@@ -608,29 +610,50 @@ object Dedup {
 
   /** The distinct ids of the training documents sharing at least one
     * word n-gram with the evaluation corpus — the drop set of
-    * [[decontaminate]], for callers that anti-join or flag it against
-    * their own frame. Scale shape: both corpora reduce to (gram, id)
-    * rows keyed on a uniform hash; contamination is ONE left-semi
-    * join on the gram (the distinct eval-gram side is small and
-    * broadcastable whenever the eval set is). Never a doc×doc
-    * comparison.
+    * [[decontaminate]], for callers that anti-join it against their
+    * own frame by id. Scale shape: the eval side is ONE bounded
+    * collect ([[evalGramSet]]); every train row is flagged by a
+    * row-local probe of its own grams
+    * ([[withExactContaminationFlag]]), and the flagged ids are made
+    * distinct. The train side is never exploded, shuffled by gram or
+    * joined; never a doc×doc comparison.
     */
   def contaminatedIds(train: DataFrame, evalSet: DataFrame,
-      text: String, id: String, n: Int = 8): DataFrame = {
-    // Tokens here are NON-EMPTY words only, and zero-token documents
-    // produce no grams at all: an empty/whitespace-only doc would
-    // otherwise fold to the sentinel gram 0L and read as
-    // "contaminated" by any other empty doc despite sharing no
-    // content. (Mirrored in the DuckDB oracle.)
-    def grams(df: DataFrame): DataFrame = df
-      .withColumn("__th", contentTokenHashesExpr(text))
-      .filter(size(col("__th")) > 0)
-      .select(col(id),
-        explode(ngramHashesFromTokenHashes("__th", n)).as("gram"))
-    val evalGrams = grams(evalSet).select("gram").distinct()
-    grams(train)
-      .join(evalGrams, Seq("gram"), "left_semi")
+      text: String, id: String, n: Int = 8): DataFrame =
+    withExactContaminationFlag(train.select(col(id), col(text)), text,
+        evalGramSet(evalSet, text, n), n)
+      .filter(col("contaminated"))
       .select(col(id)).distinct()
+
+  /** The eval corpus's distinct word n-gram hashes as a frame (`__g`).
+    * Tokens are NON-EMPTY words only, and zero-token documents produce
+    * no grams at all: an empty/whitespace-only doc would otherwise
+    * fold to the sentinel gram 0L and read as "contaminated" by any
+    * other empty doc despite sharing no content. (Mirrored in the
+    * DuckDB oracle.)
+    */
+  private def evalGrams(evalSet: DataFrame, text: String, n: Int)
+      : DataFrame =
+    evalSet.withColumn("__th", contentTokenHashesExpr(text))
+      .filter(size(col("__th")) > 0)
+      .select(explode(ngramHashesFromTokenHashes("__th", n)).as("__g"))
+      .distinct()
+
+  /** Fit half of the EXACT decontamination: the eval corpus's
+    * distinct n-gram hashes, sorted ascending — the exact twin of
+    * [[decontamBloom]] (same tokens, same grams, no false positives).
+    * The eval side of a decontamination is collect-sized by contract:
+    * the set is collected through [[Guard.boundedCollect]] at site
+    * "eval n-gram set", at most `bound` hashes (the default,
+    * 4,000,000, is 32 MB as a `long[]`), and a larger set raises
+    * naming the site.
+    */
+  def evalGramSet(evalSet: DataFrame, text: String, n: Int = 8,
+      bound: Int = 4000000): Array[Long] = {
+    val gs = Guard.boundedCollect(evalGrams(evalSet, text, n), bound,
+      "eval n-gram set").map(_.getLong(0))
+    java.util.Arrays.sort(gs)
+    gs
   }
 
   /** Fit half of the STREAMING decontamination stage: the eval set's
@@ -644,37 +667,56 @@ object Dedup {
   def decontamBloom(evalSet: DataFrame, text: String, n: Int = 8,
       expectedItems: Long = 1L << 20, fpp: Double = 0.01)
       : org.apache.spark.util.sketch.BloomFilter =
-    evalSet.withColumn("__th", contentTokenHashesExpr(text))
-      .filter(size(col("__th")) > 0)
-      .select(explode(ngramHashesFromTokenHashes("__th", n)).as("__g"))
-      .distinct()
-      .stat.bloomFilter("__g", expectedItems, fpp)
+    evalGrams(evalSet, text, n).stat.bloomFilter("__g", expectedItems,
+      fpp)
 
   /** Column-append scoring half: flag every doc that shares an
-    * n-gram with the fitted eval bloom. Entirely ROW-LOCAL — the
-    * probe is the native [[BloomMightContainExpr]] inside an EXISTS
-    * over the doc's own gram hashes, the filter rides the plan as a
-    * reference object — so it drops into a streaming stage
+    * n-gram with the fitted eval bloom. Row-local (see
+    * [[contaminationFlag]]), so it drops into a streaming stage
     * ([[graft.streaming.StreamingDedup.decontamStage]]) or any batch
     * plan with zero shuffle and zero state. Guarantee vs the exact
-    * [[decontaminate]]: every doc the exact join drops is flagged
+    * [[decontaminate]]: every doc the exact form drops is flagged
     * (no false negatives); an `fpp` fraction of clean docs may
-    * over-flag. Zero-token docs are clean (they produce no grams —
-    * the same sentinel rule as the exact form).
+    * over-flag.
     */
   def withContaminationFlag(df: DataFrame, text: String,
       bloom: org.apache.spark.util.sketch.BloomFilter, n: Int = 8)
-      : DataFrame = {
+      : DataFrame =
+    contaminationFlag(df, text, n, None,
+      g => SketchColumns.bloomMightContain(g, bloom))
+
+  /** Exact row flag: `contaminated` = the doc shares a word n-gram
+    * with `gramSet` (sorted ascending, as [[evalGramSet]] returns it)
+    * — the drop rule of [[decontaminate]], per row. Row-local (see
+    * [[contaminationFlag]]); the probe is a binary search of the set.
+    * With `gate`, only rows where it holds are hashed and probed; the
+    * flag is null on the others.
+    */
+  def withExactContaminationFlag(df: DataFrame, text: String,
+      gramSet: Array[Long], n: Int = 8, gate: Option[Column] = None)
+      : DataFrame =
+    contaminationFlag(df, text, n, gate,
+      g => SketchColumns.longSetContains(g, gramSet))
+
+  /** The one flag body both decontamination forms share:
+    * `contaminated` = size(tokens) > 0 ∧ EXISTS(gram ∈ the doc's own
+    * n-grams: `probe(gram)`). Zero-token docs are clean (they produce
+    * no grams, as in [[evalGrams]]); a null text is never flagged true.
+    * The probe's artifact rides the plan as a reference object, so
+    * the flag adds no shuffle, no join and no state.
+    */
+  private def contaminationFlag(df: DataFrame, text: String, n: Int,
+      gate: Option[Column], probe: Column => Column): DataFrame = {
     val th = "__dc_th"
     val clash = Seq(th, "contaminated").filter(df.columns.contains)
     require(clash.isEmpty,
-      s"withContaminationFlag: input already contains column(s) " +
+      s"contamination flag: input already contains column(s) " +
         s"${clash.mkString(", ")}")
-    df.withColumn(th, contentTokenHashesExpr(text))
+    val hashes = contentTokenHashesExpr(text)
+    df.withColumn(th, gate.fold(hashes)(when(_, hashes)))
       .withColumn("contaminated",
         size(col(th)) > 0 &&
-          exists(ngramHashesFromTokenHashes(th, n),
-            g => SketchColumns.bloomMightContain(g, bloom)))
+          exists(ngramHashesFromTokenHashes(th, n), probe))
       .drop(th)
   }
 

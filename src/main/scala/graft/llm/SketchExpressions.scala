@@ -53,10 +53,33 @@ case class BloomMightContainExpr(child: Expression,
       : BloomMightContainExpr = copy(child = newChild)
 }
 
+/** boolean membership probe of a long in a sorted `long[]` (binary
+  * search). The set rides the plan as a reference object, so the
+  * generated code is the same text for every set.
+  */
+case class LongSetContainsExpr(child: Expression,
+    sorted: Array[Long]) extends UnaryExpression {
+  override def dataType: DataType = BooleanType
+  override protected def nullSafeEval(input: Any): Any =
+    java.util.Arrays.binarySearch(sorted, input.asInstanceOf[Long]) >= 0
+  override protected def doGenCode(ctx: CodegenContext,
+      ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("longSet", sorted, "long[]")
+    defineCodeGen(ctx, ev,
+      c => s"(java.util.Arrays.binarySearch($ref, $c) >= 0)")
+  }
+  override def toString: String =
+    s"long_set_contains($child, ${sorted.length} keys)"
+  override protected def withNewChildInternal(newChild: Expression)
+      : LongSetContainsExpr = copy(child = newChild)
+}
+
 object SketchColumns {
   import org.apache.spark.sql.graftglue.ColumnBridge.{column, expression}
   def countMinEstimate(c: Column, sketch: CountMinSketch): Column =
     column(CountMinEstimateExpr(expression(c), sketch))
   def bloomMightContain(c: Column, filter: BloomFilter): Column =
     column(BloomMightContainExpr(expression(c), filter))
+  def longSetContains(c: Column, sorted: Array[Long]): Column =
+    column(LongSetContainsExpr(expression(c), sorted))
 }

@@ -1,7 +1,8 @@
 package graft
 
 import graft.engine.{Dist, Guard, Pin}
-import graft.llm.{BpeFitReference, Similarity, TextAnalysis}
+import graft.llm.{BpeFitReference, DecontamReference, Dedup,
+  Similarity, TextAnalysis}
 import org.apache.spark.graftglue.ListenerBus
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
@@ -28,6 +29,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * - the BPE fit's job counts (one bounded collect of the word-count
   *   table, at most 4,000,000 distinct words; every round on the
   *   driver; no job when nothing is fitted);
+  * - exact decontamination (one bounded eval n-gram collect, a
+  *   row-local probe per train row) against the gram semi-join form
+  *   it replaced ([[graft.llm.DecontamReference]]): equal id sets,
+  *   equal curate / funnel / releaseGate outputs; the job counts of
+  *   funnel and prepare; the eval n-gram set's bound;
   * - [[Similarity.bruteForceTopK]]'s in-plan query-cardinality guard
   *   (results unchanged under the bound, loud raise over it);
   * - [[Guard.boundedCollect]] (all rows under the bound, raise with
@@ -168,7 +174,7 @@ class OptimizeR22Spec extends AnyFunSuite {
   // runs its frames (the BPE fit collects while the frame is built)
   private def jobsOf(body: => Unit): Int = {
     val sc = spark.sparkContext
-    val group = "bpe-job-count"
+    val group = "job-count"
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
@@ -178,7 +184,7 @@ class OptimizeR22Spec extends AnyFunSuite {
     }
     sc.addSparkListener(listener)
     try {
-      sc.setJobGroup(group, "BPE job count")
+      sc.setJobGroup(group, "job count")
       try body finally sc.clearJobGroup()
     } finally {
       ListenerBus.drain(sc)
@@ -220,6 +226,124 @@ class OptimizeR22Spec extends AnyFunSuite {
   test("BPE job count: a fit of 0 rounds starts no job") {
     assert(jobsOf(TextAnalysis.bpeFitMerges(corpora(1), "text",
       rounds = 0, batch = 1)) === 0)
+  }
+
+  // decontamination fixtures: duplicate texts, empty and
+  // whitespace-only docs and null texts on both sides, docs shorter
+  // than n (one whole-document gram), case and spacing variants,
+  // non-ASCII words, and an eval doc overlapping a train doc only in
+  // its first three words
+  private val decon =
+    "every brave knight must guard a tall tower of stone and gold for the queen"
+  private val french = "ça va très bien merci beaucoup mon ami 😀 à demain"
+  private lazy val deconTrain = Seq[(java.lang.Long, String)](
+      (0L, "the cat and the dog is in the house of a king to see"),
+      (1L, "the cat and the dog is in the house of a king to see"),
+      (2L, decon), (3L, decon),
+      (4L, "EVERY  brave knight must guard a tall tower of stone " +
+        "and gold for the queen today"),
+      (5L, ""), (6L, "   "), (7L, null), (8L, null),
+      (9L, "short text"), (10L, "tiny"),
+      (11L, french), (12L, "merci beaucoup mon ami et à bientôt"),
+      (13L, "a king and the dog is in the house of the cat to see it"),
+      (14L, "the lazy river runs past the quiet mill every morning"))
+    .toDF("doc_id", "text")
+  private lazy val deconEval = Seq[(Long, String)](
+      (100L, decon), (101L, "   "), (102L, ""), (103L, null),
+      (104L, "short text"),
+      (105L, "ça va très bien merci beaucoup mon ami 😀"),
+      (106L, "the lazy river flows nowhere near"), (107L, decon))
+    .toDF("doc_id", "text")
+
+  private def idSet(df: DataFrame): Set[Option[Long]] =
+    df.collect().map(r => Option(r.get(0)).map(_.asInstanceOf[Long]))
+      .toSet
+
+  test("contaminatedIds / decontaminate == the gram semi-join form " +
+      "at n = 3 and n = 8, null id included") {
+    val train = deconTrain.union(Seq[(java.lang.Long, String)](
+      (null, decon), (null, "nothing shared here at all")).toDF(
+      "doc_id", "text"))
+    for (n <- Seq(3, 8)) {
+      val got = idSet(Dedup.contaminatedIds(train, deconEval, "text",
+        "doc_id", n))
+      assert(got === idSet(DecontamReference.contaminatedIds(train,
+        deconEval, "text", "doc_id", n)), s"n=$n")
+      val kept = Dedup.decontaminate(train, deconEval, "text",
+        "doc_id", n).collect().map(r => Option(r.get(0))).toSeq
+      val keptRef = DecontamReference.decontaminate(train, deconEval,
+        "text", "doc_id", n).collect().map(r => Option(r.get(0))).toSeq
+      assert(kept.sortBy(_.toString) === keptRef.sortBy(_.toString),
+        s"n=$n")
+      // not vacuous: each n flags the verbatim, case/spacing and
+      // non-ASCII overlaps and the whole-document short gram
+      assert(Set(2L, 3L, 4L, 9L, 11L).map(Option(_)).subsetOf(got),
+        s"n=$n: $got")
+      assert(got.contains(None), s"n=$n: $got")
+    }
+    // n = 3 only: the three-word overlap
+    assert(idSet(Dedup.contaminatedIds(train, deconEval, "text",
+      "doc_id", 3)).contains(Some(14L)))
+    assert(!idSet(Dedup.contaminatedIds(train, deconEval, "text",
+      "doc_id", 8)).contains(Some(14L)))
+  }
+
+  test("curate, funnel and releaseGate == their gram semi-join forms") {
+    val d = deconTrain.filter(col("doc_id").isNotNull)
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSeq
+      .sortBy(_.mkString("|"))
+    assert(rows(CurationJob.curate(d, "text", "doc_id",
+        evalSet = Some(deconEval))) ===
+      rows(DecontamReference.curate(d, deconEval, "text", "doc_id")))
+    val f = rows(CurationJob.funnel(d, "text", "doc_id",
+      evalSet = Some(deconEval)))
+    assert(f === rows(DecontamReference.funnel(d, deconEval, "text",
+      "doc_id")))
+    // not vacuous: the gated survivors lose decontaminated docs
+    assert(f(3)(2) != f(4)(2), f)
+    val markers = Seq("gpl" -> "gnu general public license")
+    val cols = Seq("doc_id", "license", "copyleft_gate", "n_email",
+      "n_ip", "n_phone", "pii_gate", "contaminated", "is_anonymous",
+      "released")
+    val gate = CurationJob.releaseGate(d, "text", "doc_id", markers,
+      evalSet = Some(deconEval))
+    assert(gate.columns.toSeq === cols)
+    assert(rows(gate) === rows(DecontamReference.releaseGate(d,
+      deconEval, "text", "doc_id", markers).select(cols.map(col): _*)))
+    assert(gate.filter(col("contaminated")).count() === 5L)
+    // the one intended difference: a contaminated text group whose
+    // ids are all null is now dropped (the anti-join on a null id
+    // kept it)
+    val withNull = d.union(Seq[(java.lang.Long, String)](
+      (null, decon + " again")).toDF("doc_id", "text"))
+    val keptIds = CurationJob.curate(withNull, "text", "doc_id",
+        evalSet = Some(deconEval))
+      .select("doc_id").distinct().collect().map(r => Option(r.get(0)))
+    assert(!keptIds.contains(None))
+  }
+
+  // ceilings: the counts measured on the fit-then-probe form in the
+  // test session (the gram semi-join form ran 8 and 7 jobs here)
+  test("decontamination job count: funnel and prepare with an eval " +
+      "set run at most 5 jobs each") {
+    val d = deconTrain.filter(col("doc_id").isNotNull)
+    assert(jobsOf(CurationJob.funnel(d, "text", "doc_id",
+      evalSet = Some(deconEval)).collect()) <= 5)
+    assert(jobsOf(CurationJob.prepare(d, Some(deconEval), "text",
+      "doc_id").collect()) <= 5)
+  }
+
+  test("evalGramSet: sorted distinct grams under the bound; an eval " +
+      "set over it raises naming the site") {
+    val gs = Dedup.evalGramSet(deconEval, "text", 3)
+    assert(gs.toSeq === gs.toSeq.distinct.sorted)
+    assert(gs.length === 25)
+    assert(Dedup.evalGramSet(deconEval, "text", 3,
+      bound = gs.length).toSeq === gs.toSeq)
+    val err = intercept[IllegalArgumentException] {
+      Dedup.evalGramSet(deconEval, "text", 3, bound = gs.length - 1)
+    }
+    assert(err.getMessage.contains("eval n-gram set"))
   }
 
   test("bruteForceTopK: results unchanged under the query bound; " +

@@ -51,6 +51,31 @@ class RetailSpec extends AnyFunSuite {
       (1L to 1000L).map(i => (i * 7919) % 101).sum)
   }
 
+  test("Dist.prefixSum: a null value opening a range partition " +
+      "carries the running total (longs and decimals, withTotal)") {
+    // ids 11, 21 and 31 open partitions 2-4 of 4 with a null value;
+    // id 1 is a null with nothing before it, so its total stays null
+    val longs = (1L to 40L).map(i =>
+        (i, if (i % 5 == 1) None else Some(i)))
+      .toDF("id", "v")
+    val decimals = longs.select(col("id"),
+      (col("v") / 4).cast("decimal(12,2)").as("v"))
+    val w = Window.orderBy(col("id"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    for (df <- Seq(longs, decimals)) {
+      val dist = graft.engine.Dist.prefixSum(df, Seq(col("id")), "v",
+        "run", numParts = 4, withTotal = true)
+      val naive = df.withColumn("run", sum("v").over(w))
+      val got = dist.orderBy("id").select("run").collect().map(_.get(0))
+      val expect = naive.orderBy("id").select("run").collect()
+        .map(_.get(0))
+      assert(got.toSeq === expect.toSeq)
+      assert(got(0) == null && Seq(10, 20, 30).forall(got(_) != null))
+      assert(dist.select("run_total").distinct().collect()
+        .map(_.get(0)).toSeq === Seq(expect.last))
+    }
+  }
+
   test("Dist.groupedRank equals the per-group row_number window") {
     // 3 low-cardinality groups, order values colliding across
     // range-partition boundaries; doc_id is the strict tiebreaker
