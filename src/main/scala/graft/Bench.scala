@@ -33,10 +33,8 @@ object Bench {
     // BENCH_DETAIL.json at startup; falls back to this run's own min
     // sample, then to a flat default), floored so ordinary VM noise on
     // sub-second queries never trips it.
-    val clampMult =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_CLAMP_MULT", "20").toDouble
-    val clampFloor =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_CLAMP_FLOOR", "30").toDouble
+    val clampMult = 20.0
+    val clampFloor = 30.0
     // Tighter floor for sub-second-prior rows (round 18): the r17
     // driver run lost 85/288 queries because ~8 stall pockets on
     // trivial queries each burned 20-30 s before the 30 s floor
@@ -46,10 +44,8 @@ object Bench {
     // overwhelming odds (max healthy spread ever observed on a
     // sub-second row is ~4x), so max(10 s, 20x·prior) cuts the
     // per-stall waste by ~2/3 without ever clipping honest noise.
-    val clampFloorFast =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_CLAMP_FLOOR_FAST", "10").toDouble
-    val clampDefault =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_CLAMP_DEFAULT", "120").toDouble
+    val clampFloorFast = 10.0
+    val clampDefault = 120.0
     // Prior medians: BENCH_PRIOR.json is a committed snapshot of the
     // last HEALTHY full closing run, refreshed by the builder only —
     // the driver's own BENCH_DETAIL.json can be a stall-degraded
@@ -80,8 +76,7 @@ object Bench {
         }
       } catch { case _: Throwable => Map.empty }
     val priorMedians: Map[String, Double] =
-      readMedians("BENCH_DETAIL.json") ++ readMedians(
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_PRIOR", "BENCH_PRIOR.json"))
+      readMedians("BENCH_DETAIL.json") ++ readMedians("BENCH_PRIOR.json")
     // Prior round's per-query sample counts (the committed driver
     // artifact, read BEFORE this run overwrites it): pass 1 visits
     // queries the PREVIOUS round never measured FIRST, so even if a
@@ -135,12 +130,6 @@ object Bench {
     def grainFor(name: String): Double =
       if (!grainOn || scalingMode) 1.0
       else grainTry.getOrElse(name, BenchGrain.grains.getOrElse(name, 1.0))
-    // test hook: "name:sec" sleeps inside that query's timed body to
-    // simulate a VM stall episode for clamp testing
-    val fakeStall: Map[String, Double] =
-      sys.env.get("SPARK_GRAFT_BENCH_FAKE_STALL").map { s =>
-        val Array(n, sec) = s.split(':'); Map(n -> sec.toDouble)
-      }.getOrElse(Map.empty)
     // cpus + resolved master in both artifacts (round 22, VERDICT r21
     // #2): the driver's scaling block compares an 8-core run against
     // a 32-core run — the artifact itself must say which it was.
@@ -227,7 +216,7 @@ object Bench {
     // degrades to fewer passes when the deadline won't fit another one,
     // and aborts a pass mid-way if the deadline is already blown — a
     // partial artifact beats an rc=124 kill with none.
-    val maxRuns = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
+    val maxRuns = 3
     // Two-tier passes: pass 1 measures EVERY query (zero unmeasured);
     // passes 2+ only revisit queries whose best sample so far is at or
     // above `fastCut` seconds, plus anything still sample-less (stalled
@@ -239,9 +228,8 @@ object Bench {
     // artifact with 100 queries unmeasured. min-of-1 for a fast query
     // is self-correcting: if VM noise inflates its one sample past the
     // cut, the inflated min puts it back in the next pass's revisit
-    // set. Set to 0 to force full passes.
-    val fastCut = sys.env
-      .getOrElse("SPARK_GRAFT_BENCH_FAST_CUT", "1.0").toDouble
+    // set.
+    val fastCut = 1.0
     // Per-query statistic: median at >= 3 samples; MIN below that. This
     // VM stalls intermittently (measured 5-20x inflation on identical
     // code within one JVM — kernel_ma spread 2.0-38.0 s over 6
@@ -356,7 +344,6 @@ object Bench {
           val budget = math.min(clamp,
             math.max(5.0, deadline - elapsedSec + 5))
           val res = timedRun(name, budget) {
-            fakeStall.get(name).foreach(s => Thread.sleep((s * 1000).toLong))
             BenchGrain.withGrain(grainFor(name)) {
               fn(spark, sfDir).write.format("noop").mode("overwrite").save()
             }
@@ -502,8 +489,7 @@ object Bench {
       // deadline — so starting an unfinishable pass cannot cause an
       // rc=124 kill, it just clips. Never after a runaway thread: its
       // zombie Spark jobs contaminate every later sample.
-      val minPassSec =
-        sys.env.getOrElse("SPARK_GRAFT_BENCH_MIN_PASS", "20").toDouble
+      val minPassSec = 20.0
       go = elapsedSec + minPassSec < deadline && !runawayThread
       }
     }

@@ -30,37 +30,8 @@ object Dist {
   def prefixSum(df: DataFrame, orderCols: Seq[Column], value: String,
       out: String, numParts: Int = 32,
       withTotal: Boolean = false): DataFrame = {
-    val ranged = Pin.point(df
-      .repartitionByRange(numParts, orderCols: _*)
-      .withColumn("__pid", spark_partition_id()),
-      "Dist.prefixSum")
-    val ptots = ranged.groupBy("__pid")
-      .agg(sum(col(value)).as("__ptot"))
-    val zero = lit(0).cast(ptots.schema("__ptot").dataType)
-    // exclusive prefix over the <= numParts-row subtotal frame as a
-    // predecessor-sum self-join (numParts^2 predicate evals, all
-    // broadcast) — the round-15 form used Window.orderBy over the
-    // same tiny frame, which is correct but executes as an
-    // unpartitioned WindowExec and logs the scary "moving all data
-    // to a single partition" warning on every run
-    val offsets = ptots
-      .join(broadcast(ptots.select(col("__pid").as("__qid"),
-        col("__ptot").as("__qtot"))), col("__qid") < col("__pid"),
-        "left")
-      .groupBy(col("__pid"))
-      .agg(sum(col("__qtot")).as("__offset"))
-    val local = Window.partitionBy("__pid").orderBy(orderCols: _*)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    // either part is null when it has seen no non-null value; the
-    // total is null only when both are
-    val base = ranged
-      .join(broadcast(offsets.select("__pid", "__offset")), "__pid")
-      .withColumn("__local", sum(col(value)).over(local))
-      .withColumn(out,
-        when(col("__offset").isNull && col("__local").isNull, null)
-          .otherwise(coalesce(col("__offset"), zero) +
-            coalesce(col("__local"), zero)))
-      .drop("__pid", "__offset", "__local")
+    val (base, ptots) = rangedRunningSum(df, Nil, orderCols,
+      col(value), out, numParts, "Dist.prefixSum")
     if (!withTotal) base
     else base.crossJoin(broadcast(
       ptots.agg(sum(col("__ptot")).as(s"${out}_total"))))
@@ -73,39 +44,20 @@ object Dist {
     * (group))` puts each group's entire frame through a single-task
     * sort — fine for high-cardinality keys, a scale-killer when the
     * group is a handful of corpus-sized sources (the round-20 verdict
-    * flag on interleaveSchedule). Same machinery as [[prefixSum]],
-    * generalized with the group key: range-partition on
+    * flag on interleaveSchedule). Under a strict total order the rank
+    * is the running count of rows, so this is [[prefixSum]]'s
+    * machinery over the value 1 with the group key: range-partition on
     * (group, orderCols) so each group spans contiguous partitions,
     * count rows per (group, partition), broadcast each partition's
-    * per-group predecessor total back as an offset, and rank locally
+    * per-group predecessor total back as an offset, and count locally
     * inside each (partition, group) slice. The offsets frame is
-    * ≤ #groups × numParts rows — broadcast-safe by construction; the
-    * subtotal prefix is the same predecessor-sum self-join shape as
-    * [[prefixSum]] (no unpartitioned window on the tiny frame).
+    * ≤ #groups × numParts rows — broadcast-safe by construction.
     */
   def groupedRank(df: DataFrame, group: String, orderCols: Seq[Column],
       out: String, numParts: Int = 32,
       withGroupTotal: Boolean = false): DataFrame = {
-    val ranged = Pin.point(df
-      .repartitionByRange(numParts, (col(group) +: orderCols): _*)
-      .withColumn("__pid", spark_partition_id()),
-      "Dist.groupedRank")
-    val ptots = ranged.groupBy(col(group), col("__pid"))
-      .agg(count(lit(1)).as("__ptot"))
-    val offsets = ptots
-      .join(broadcast(ptots.select(col(group).as("__qg"),
-        col("__pid").as("__qid"), col("__ptot").as("__qtot"))),
-        col(group) === col("__qg") && col("__qid") < col("__pid"),
-        "left")
-      .groupBy(col(group), col("__pid"))
-      .agg(coalesce(sum(col("__qtot")), lit(0L)).as("__offset"))
-    val local = Window.partitionBy(col("__pid"), col(group))
-      .orderBy(orderCols: _*)
-    val base = ranged
-      .join(broadcast(offsets), Seq(group, "__pid"))
-      .withColumn(out,
-        col("__offset") + row_number().over(local).cast("long"))
-      .drop("__pid", "__offset")
+    val (base, ptots) = rangedRunningSum(df, Seq(group), orderCols,
+      lit(1L), out, numParts, "Dist.groupedRank")
     // `<out>_n` = the group's row count, from the SAME subtotal frame
     // (no extra pass over the data) — the ntile / percent_rank closed
     // forms need (rank, group total) together, and computing the
@@ -113,6 +65,50 @@ object Dist {
     if (!withGroupTotal) base
     else base.join(broadcast(ptots.groupBy(col(group))
       .agg(sum(col("__ptot")).as(s"${out}_n"))), Seq(group))
+  }
+
+  /** The range-partitioned running sum behind [[prefixSum]] and
+    * [[groupedRank]]: `out` = inclusive running sum of `value` within
+    * each `keys` group under `orderCols`. Range-partitions on
+    * (keys, orderCols) and pins the result, sums `value` per
+    * (keys, partition), turns those subtotals into per-partition
+    * offsets with a predecessor-sum self-join over the tiny subtotal
+    * frame (numParts² predicate evals per group, all broadcast — a
+    * `Window.orderBy` there would execute as an unpartitioned
+    * WindowExec), and adds each offset to a partition-local running
+    * window. Returns the frame and the (keys, `__pid`, `__ptot`)
+    * subtotals.
+    */
+  private def rangedRunningSum(df: DataFrame, keys: Seq[String],
+      orderCols: Seq[Column], value: Column, out: String, numParts: Int,
+      site: String): (DataFrame, DataFrame) = {
+    val ranged = Pin.point(df
+      .repartitionByRange(numParts, (keys.map(col) ++ orderCols): _*)
+      .withColumn("__pid", spark_partition_id()), site)
+    val part = keys.map(col) :+ col("__pid")
+    val ptots = ranged.groupBy(part: _*).agg(sum(value).as("__ptot"))
+    val zero = lit(0).cast(ptots.schema("__ptot").dataType)
+    val offsets = ptots
+      .join(broadcast(ptots.select(keys.map(k => col(k).as(s"__q$k")) ++
+        Seq(col("__pid").as("__qid"), col("__ptot").as("__qtot")): _*)),
+        (keys.map(k => col(k) === col(s"__q$k")) :+
+          (col("__qid") < col("__pid"))).reduce(_ && _),
+        "left")
+      .groupBy(part: _*)
+      .agg(sum(col("__qtot")).as("__offset"))
+    val local = Window.partitionBy(part: _*).orderBy(orderCols: _*)
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    // either part is null when it has seen no non-null value; the
+    // total is null only when both are
+    val base = ranged
+      .join(broadcast(offsets), keys :+ "__pid")
+      .withColumn("__local", sum(value).over(local))
+      .withColumn(out,
+        when(col("__offset").isNull && col("__local").isNull, null)
+          .otherwise(coalesce(col("__offset"), zero) +
+            coalesce(col("__local"), zero)))
+      .drop("__pid", "__offset", "__local")
+    (base, ptots)
   }
 
   /** Broadcast 1-row aggregate cross: attaches `aggs(of)` to every

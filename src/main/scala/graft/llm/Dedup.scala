@@ -672,9 +672,9 @@ object Dedup {
 
   /** Column-append scoring half: flag every doc that shares an
     * n-gram with the fitted eval bloom. Row-local (see
-    * [[contaminationFlag]]), so it drops into a streaming stage
-    * ([[graft.streaming.StreamingDedup.decontamStage]]) or any batch
-    * plan with zero shuffle and zero state. Guarantee vs the exact
+    * [[contaminationFlag]]), so it applies to a streaming frame
+    * unchanged (any output mode) or any batch plan with zero shuffle
+    * and zero state. Guarantee vs the exact
     * [[decontaminate]]: every doc the exact form drops is flagged
     * (no false negatives); an `fpp` fraction of clean docs may
     * over-flag.
@@ -726,8 +726,9 @@ object Dedup {
     * (a span, unlike a [[decontaminate]] gram, has no whole-document
     * fallback — there is no n-token span to dedup). The shared
     * building block of the span-level dedup family below; public
-    * because it is also the stateless streaming front half
-    * ([[graft.streaming.StreamingDedup.spanGramStage]]).
+    * because it is also, applied to a stream, the stateless front
+    * half of [[graft.streaming.StreamingDedup.spanScrubDecisions]]
+    * (row-local, zero state, any output mode).
     */
   def spanGrams(df: DataFrame, text: String, id: String,
       n: Int = 20, carry: Seq[String] = Nil): DataFrame = df

@@ -326,6 +326,60 @@ object Multimodal {
       }
   }
 
+  // ---- codepoint payload: the byte source of every codec pipeline ---
+
+  /** (doc_id, first `n` codepoints of the text) rows. Only the prefix
+    * crosses into the typed stage, where the codepoint walk runs as
+    * one native O(len) pass (the SQL formulation — n substring calls
+    * per row — is interpreted and O(n²) per row; measured ~8× slower
+    * at sf0.1). Spark substring/length count Unicode code points,
+    * exactly what Java codePoints() iterates and what the oracle's
+    * ascii(substring(...)) reads.
+    */
+  private[graft] def prefixes(df: DataFrame, text: String, id: String,
+      n: Int): Dataset[(Long, String)] = {
+    import df.sparkSession.implicits._
+    df.select(col(id).cast("long").as("doc_id"),
+        substring(col(text), 1, n).as("__pfx"))
+      .as[(Long, String)]
+  }
+
+  /** The first `n` codepoints of `s`, each mod 256, zero-padded. */
+  private[graft] def codepointBytes(s: String, n: Int): Array[Int] = {
+    val cps = s.codePoints().toArray
+    Array.tabulate(n)(j => if (j < cps.length) cps(j) % 256 else 0)
+  }
+
+  /** 64 packed RGB pixels (an 8×8 raster) from the 192 bytes at
+    * `off`. */
+  private[graft] def rgbPixels(v: Array[Int], off: Int): Array[Int] =
+    Array.tabulate(64)(i => (v(off + 3 * i) << 16) |
+      (v(off + 3 * i + 1) << 8) | v(off + 3 * i + 2))
+
+  /** Centered 16-bit PCM samples `(b - 128) * 256`. */
+  private[graft] def pcmSamples(v: Array[Int]): Array[Short] =
+    v.map(b => ((b - 128) * 256).toShort)
+
+  /** (sum of squares, peak, zero crossings, max and sum absolute
+    * error) of a reconstructed clip against its source samples. */
+  private def reconStats(rec: Array[Short], src: Array[Short])
+      : (Long, Long, Long, Long, Long) = {
+    var ss = 0L; var peak = 0L; var zc = 0L
+    var maxErr = 0L; var sumErr = 0L
+    var j = 0
+    while (j < src.length) {
+      val x = rec(j).toLong
+      ss += x * x
+      if (math.abs(x) > peak) peak = math.abs(x)
+      if (j > 0 && x * rec(j - 1).toLong < 0) zc += 1
+      val e = math.abs(x - src(j).toLong)
+      if (e > maxErr) maxErr = e
+      sumErr += e
+      j += 1
+    }
+    (ss, peak, zc, maxErr, sumErr)
+  }
+
   /** End-to-end REAL decode over a text-derived raster, fully
     * oracle-exact: each doc's first 192 character codepoints (mod 256,
     * zero-padded — a portable SQL expression both engines share)
@@ -336,27 +390,15 @@ object Multimodal {
     * no rounding. encode∘decode being the identity is asserted per
     * row (`roundtrip_ok`), so the oracle's TRUE literal is backed by
     * a real in-query check, and the oracle recomputes every feature
-    * directly from the codepoints.
+    * directly from the codepoints. A row-local typed map with zero
+    * state, so it applies to a streaming frame unchanged, in any
+    * output mode.
     */
   def bmpPipeline(df: DataFrame, text: String, id: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    // only the 192-codepoint prefix crosses into the typed stage; the
-    // codepoint walk runs there as one native O(len) pass (the SQL
-    // formulation — 192 substring calls per row — is interpreted and
-    // O(192²) per row; measured ~8× slower at sf0.1). Spark substring/
-    // length count Unicode code points, exactly what Java codePoints()
-    // iterates and what the oracle's ascii(substring(...)) reads.
-    val derived = df
-      .select(col(id).cast("long").as("doc_id"),
-        substring(col(text), 1, 192).as("__pfx"))
-      .as[(Long, String)]
-    derived.map { case (docId, pfx) =>
-      val cps = pfx.codePoints().toArray
-      val v = Array.tabulate(192)(j =>
-        if (j < cps.length) cps(j) % 256 else 0)
-      val pixels = Array.tabulate(64)(i =>
-        (v(3 * i) << 16) | (v(3 * i + 1) << 8) | v(3 * i + 2))
+    prefixes(df, text, id, 192).map { case (docId, pfx) =>
+      val pixels = rgbPixels(codepointBytes(pfx, 192), 0)
       val bmp = encodeBmp(DecodedImage(8, 8, pixels))
       val dec = decodeBmp(bmp).get
       val (r, g, b) = channelMeans(dec)
@@ -385,16 +427,8 @@ object Multimodal {
     val spark = df.sparkSession
     import spark.implicits._
     val P = graft.llm.HashConstants.P
-    val derived = df
-      .select(col(id).cast("long").as("doc_id"),
-        substring(col(text), 1, 192).as("__pfx"))
-      .as[(Long, String)]
-    derived.flatMap { case (docId, pfx) =>
-      val cps = pfx.codePoints().toArray
-      val v = Array.tabulate(192)(j =>
-        if (j < cps.length) cps(j) % 256 else 0)
-      val pixels = Array.tabulate(64)(i =>
-        (v(3 * i) << 16) | (v(3 * i + 1) << 8) | v(3 * i + 2))
+    prefixes(df, text, id, 192).flatMap { case (docId, pfx) =>
+      val pixels = rgbPixels(codepointBytes(pfx, 192), 0)
       // A codec failure must surface through the roundtrip_ok flag
       // the row already carries — a bare .get would throw
       // NoSuchElementException in the executor and kill the whole
@@ -473,21 +507,14 @@ object Multimodal {
     * compressed byte length is intentionally NOT an output column
     * (the one non-deterministic quantity). `roundtrip_ok` asserts
     * decode∘encode identity per row, plus that the stream really is
-    * compressed PNG (magic bytes present, not raw).
+    * compressed PNG (magic bytes present, not raw). Row-local with
+    * zero state, so it applies to a streaming frame unchanged.
     */
   def pngPipeline(df: DataFrame, text: String, id: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val derived = df
-      .select(col(id).cast("long").as("doc_id"),
-        substring(col(text), 1, 192).as("__pfx"))
-      .as[(Long, String)]
-    derived.map { case (docId, pfx) =>
-      val cps = pfx.codePoints().toArray
-      val v = Array.tabulate(192)(j =>
-        if (j < cps.length) cps(j) % 256 else 0)
-      val pixels = Array.tabulate(64)(i =>
-        (v(3 * i) << 16) | (v(3 * i + 1) << 8) | v(3 * i + 2))
+    prefixes(df, text, id, 192).map { case (docId, pfx) =>
+      val pixels = rgbPixels(codepointBytes(pfx, 192), 0)
       val png = encodePng(DecodedImage(8, 8, pixels))
       val dec = decodeCompressed(png).get
       val (r, g, b) = channelMeans(dec)
@@ -515,20 +542,14 @@ object Multimodal {
     *    high-frequency error is large — so 16 is >2× headroom
     *    against JDK codec drift while still failing loudly on any
     *    real decode bug (channel swap, stride error, double decode).
+    * Row-local with zero state, so it applies to a streaming frame
+    * unchanged.
     */
   def jpegPipeline(df: DataFrame, text: String, id: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val derived = df
-      .select(col(id).cast("long").as("doc_id"),
-        substring(col(text), 1, 192).as("__pfx"))
-      .as[(Long, String)]
-    derived.map { case (docId, pfx) =>
-      val cps = pfx.codePoints().toArray
-      val v = Array.tabulate(192)(j =>
-        if (j < cps.length) cps(j) % 256 else 0)
-      val pixels = Array.tabulate(64)(i =>
-        (v(3 * i) << 16) | (v(3 * i + 1) << 8) | v(3 * i + 2))
+    prefixes(df, text, id, 192).map { case (docId, pfx) =>
+      val pixels = rgbPixels(codepointBytes(pfx, 192), 0)
       val src = DecodedImage(8, 8, pixels)
       val jpg = encodeJpeg(src)
       val dec = decodeCompressed(jpg).get
@@ -771,33 +792,17 @@ object Multimodal {
     * `roundtrip_ok` asserts decode∘encode identity per row (samples,
     * rate, mono/16-bit acceptance) so the oracle's TRUE literal is
     * backed by a real in-query check, exactly like the image twins.
+    * Row-local with zero state, so it applies to a streaming frame
+    * unchanged, like every codec pipeline here.
     */
   def wavPipeline(df: DataFrame, text: String, id: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val derived = df
-      .select(col(id).cast("long").as("doc_id"),
-        substring(col(text), 1, 64).as("__pfx"))
-      .as[(Long, String)]
-    derived.map { case (docId, pfx) =>
-      val cps = pfx.codePoints().toArray
-      val s = Array.tabulate(64) { j =>
-        val v = if (j < cps.length) cps(j) % 256 else 0
-        ((v - 128) * 256).toShort
-      }
+    prefixes(df, text, id, 64).map { case (docId, pfx) =>
+      val s = pcmSamples(codepointBytes(pfx, 64))
       val wav = encodeWav(DecodedAudio(8000, s))
       val dec = decodeWav(wav).get
-      var ss = 0L
-      var peak = 0L
-      var zc = 0L
-      var j = 0
-      while (j < 64) {
-        val x = dec.samples(j).toLong
-        ss += x * x
-        if (math.abs(x) > peak) peak = math.abs(x)
-        if (j > 0 && x * dec.samples(j - 1).toLong < 0) zc += 1
-        j += 1
-      }
+      val (ss, peak, zc, _, _) = reconStats(dec.samples, s)
       val ok = dec.sampleRate == 8000 &&
         java.util.Arrays.equals(dec.samples, s) &&
         wav.length == 44 + 128
@@ -1162,16 +1167,8 @@ object Multimodal {
       : DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val derived = df
-      .select(col(id).cast("long").as("doc_id"),
-        substring(col(text), 1, 64).as("__pfx"))
-      .as[(Long, String)]
-    derived.map { case (docId, pfx) =>
-      val cps = pfx.codePoints().toArray
-      val s = Array.tabulate(64) { j =>
-        val v = if (j < cps.length) cps(j) % 256 else 0
-        ((v - 128) * 256).toShort
-      }
+    prefixes(df, text, id, 64).map { case (docId, pfx) =>
+      val s = pcmSamples(codepointBytes(pfx, 64))
       val wav = encodeWavAdpcm(DecodedAudio(8000, s))
       val dec = decodeWavAdpcm(wav).get
       val rec = dec.samples
@@ -1183,19 +1180,7 @@ object Multimodal {
         pred = p; idx = ix; trace(j) = p.toShort
         j += 1
       }
-      var ss = 0L; var peak = 0L; var zc = 0L
-      var maxErr = 0L; var sumErr = 0L
-      j = 0
-      while (j < 64) {
-        val x = rec(j).toLong
-        ss += x * x
-        if (math.abs(x) > peak) peak = math.abs(x)
-        if (j > 0 && x * rec(j - 1).toLong < 0) zc += 1
-        val e = math.abs(x - s(j).toLong)
-        if (e > maxErr) maxErr = e
-        sumErr += e
-        j += 1
-      }
+      val (ss, peak, zc, maxErr, sumErr) = reconStats(rec, s)
       val ok = dec.sampleRate == 8000 && wav.length == 96 &&
         java.util.Arrays.equals(rec, trace)
       (docId, wav.length.toLong, ss, peak, zc, maxErr, sumErr, ok)
@@ -1207,32 +1192,12 @@ object Multimodal {
       aLaw: Boolean): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val derived = df
-      .select(col(id).cast("long").as("doc_id"),
-        substring(col(text), 1, 64).as("__pfx"))
-      .as[(Long, String)]
-    derived.map { case (docId, pfx) =>
-      val cps = pfx.codePoints().toArray
-      val s = Array.tabulate(64) { j =>
-        val v = if (j < cps.length) cps(j) % 256 else 0
-        ((v - 128) * 256).toShort
-      }
+    prefixes(df, text, id, 64).map { case (docId, pfx) =>
+      val s = pcmSamples(codepointBytes(pfx, 64))
       val wav = encodeWavG711(DecodedAudio(8000, s), aLaw)
       val dec = decodeWavG711(wav).get
       val rec = dec.samples
-      var ss = 0L; var peak = 0L; var zc = 0L
-      var maxErr = 0L; var sumErr = 0L
-      var j = 0
-      while (j < 64) {
-        val x = rec(j).toLong
-        ss += x * x
-        if (math.abs(x) > peak) peak = math.abs(x)
-        if (j > 0 && x * rec(j - 1).toLong < 0) zc += 1
-        val e = math.abs(x - s(j).toLong)
-        if (e > maxErr) maxErr = e
-        sumErr += e
-        j += 1
-      }
+      val (ss, peak, zc, maxErr, sumErr) = reconStats(rec, s)
       val again = encodeWavG711(DecodedAudio(dec.sampleRate, rec), aLaw)
       val ok = dec.sampleRate == 8000 && wav.length == 58 + 64 &&
         java.util.Arrays.equals(again, wav)
@@ -1251,23 +1216,16 @@ object Multimodal {
     * decoded, the point of stride sampling). Channel means of the
     * decoded frames are k/64 dyadic rationals, bit-exact against the
     * oracle recomputing from the codepoints; `roundtrip_ok` asserts
-    * decode∘encode identity of the sampled frames per row.
+    * decode∘encode identity of the sampled frames per row. Row-local
+    * with zero state, so it applies to a streaming frame unchanged.
     */
   def gifPipeline(df: DataFrame, text: String, id: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val derived = df
-      .select(col(id).cast("long").as("doc_id"),
-        substring(col(text), 1, 768).as("__pfx"))
-      .as[(Long, String)]
-    derived.map { case (docId, pfx) =>
-      val cps = pfx.codePoints().toArray
-      val v = Array.tabulate(768)(j =>
-        if (j < cps.length) cps(j) % 256 else 0)
+    prefixes(df, text, id, 768).map { case (docId, pfx) =>
+      val v = codepointBytes(pfx, 768)
       val frames = Array.tabulate(4)(f =>
-        DecodedImage(8, 8, Array.tabulate(64)(i =>
-          (v(192 * f + 3 * i) << 16) | (v(192 * f + 3 * i + 1) << 8) |
-            v(192 * f + 3 * i + 2))))
+        DecodedImage(8, 8, rgbPixels(v, 192 * f)))
       val gif = encodeGif(frames.toSeq)
       // one reader pass decodes the whole stride sample (out-of-range
       // rejection is spec-pinned; probing it here would re-open a
@@ -1436,32 +1394,13 @@ object Multimodal {
       : DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val derived = df
-      .select(col(id).cast("long").as("doc_id"),
-        substring(col(text), 1, 64).as("__pfx"))
-      .as[(Long, String)]
-    derived.map { case (docId, pfx) =>
-      val cps = pfx.codePoints().toArray
-      val s = Array.tabulate(64) { j =>
-        val v = if (j < cps.length) cps(j) % 256 else 0
-        ((v - 128) * 256).toShort
-      }
+    prefixes(df, text, id, 64).map { case (docId, pfx) =>
+      val s = pcmSamples(codepointBytes(pfx, 64))
       val bytes = encodeMdct(DecodedAudio(8000, s))
       val (rate, n, coefs) = decodeMdct(bytes).get
       val rec = mdctReconstruct(n, coefs)
-      var ss = 0L; var peak = 0L; var zc = 0L
-      var maxErr = 0L; var sumErr = 0L; var ck = 0L
-      var j = 0
-      while (j < 64) {
-        val x = rec(j).toLong
-        ss += x * x
-        if (math.abs(x) > peak) peak = math.abs(x)
-        if (j > 0 && x * rec(j - 1).toLong < 0) zc += 1
-        val e = math.abs(x - s(j).toLong)
-        if (e > maxErr) maxErr = e
-        sumErr += e
-        j += 1
-      }
+      val (ss, peak, zc, maxErr, sumErr) = reconStats(rec, s)
+      var ck = 0L
       coefs.zipWithIndex.foreach { case (fr, f) =>
         fr.zipWithIndex.foreach { case (q, k) =>
           ck += q * (f * mdctN + k + 1)
@@ -1693,14 +1632,9 @@ object Multimodal {
       : DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val derived = df
-      .select(col(id).cast("long").as("doc_id"),
-        substring(col(text), 1, mcvFrames * mcvW * mcvW).as("__pfx"))
-      .as[(Long, String)]
-    derived.map { case (docId, pfx) =>
-      val cps = pfx.codePoints().toArray
-      val v = Array.tabulate(mcvFrames * mcvW * mcvW)(j =>
-        if (j < cps.length) cps(j) % 256 else 0)
+    val n = mcvFrames * mcvW * mcvW
+    prefixes(df, text, id, n).map { case (docId, pfx) =>
+      val v = codepointBytes(pfx, n)
       val frames = Array.tabulate(mcvFrames)(f =>
         Array.tabulate(mcvW * mcvW)(p => v(mcvW * mcvW * f + p)))
       val (mvs, qs, recTrace) = mcvAnalyze(frames)
@@ -1896,19 +1830,10 @@ object Multimodal {
       : DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val derived = df
-      .select(col(id).cast("long").as("doc_id"),
-        substring(col(text), 1, 576).as("__pfx"))
-      .as[(Long, String)]
-    derived.map { case (docId, pfx) =>
-      val cps = pfx.codePoints().toArray
-      val v = Array.tabulate(576)(j =>
-        if (j < cps.length) cps(j) % 256 else 0)
-      val frames = Array.tabulate(3) { f =>
-        DecodedImage(8, 8, Array.tabulate(64)(i =>
-          (v(192 * f + 3 * i) << 16) | (v(192 * f + 3 * i + 1) << 8)
-            | v(192 * f + 3 * i + 2)))
-      }
+    prefixes(df, text, id, 576).map { case (docId, pfx) =>
+      val v = codepointBytes(pfx, 576)
+      val frames = Array.tabulate(3)(f =>
+        DecodedImage(8, 8, rgbPixels(v, 192 * f)))
       val avi = encodeMjpegAvi(frames.toSeq)
       val hdr = mjpegHeader(avi)
       val dec = decodeMjpegFrames(avi, Seq(0, 2))

@@ -1474,11 +1474,11 @@ object TextAnalysis {
   /** Column-append, ROW-LOCAL form of [[charEntropy]] (same
     * n_bigrams/entropy values to the bit: the per-row fold visits
     * distinct bigrams in the same sorted order as the batch form's
-    * sorted collect) — drops into a streaming stage
-    * ([[graft.streaming.StreamingDedup.entropyStage]]) or any plan
-    * with zero shuffle. Same per-row O(distinct×occurrences) trade
-    * as [[withDocRepetition]]: right for bounded stream records, use
-    * the batch explode form over a corpus.
+    * sorted collect) — applies to a streaming frame unchanged (zero
+    * state, any output mode) or any plan with zero shuffle. Same
+    * per-row O(distinct×occurrences) trade as [[withDocRepetition]]:
+    * right for bounded stream records, use the batch explode form
+    * over a corpus.
     */
   def withCharEntropy(df: DataFrame, text: String): DataFrame = {
     val internals = Seq("__ce_cs", "__ce_bg", "__ce_d", "__ce_n")
@@ -1512,8 +1512,7 @@ object TextAnalysis {
   /** Column-append, ROW-LOCAL form of [[docRepetition]]: the same
     * five repetition signals (identical integer ppm values) computed
     * entirely in-row with HOFs, keeping every input column — so it
-    * drops into a streaming stage
-    * ([[graft.streaming.StreamingDedup.repetitionStage]]) or any
+    * applies to a streaming frame unchanged (any output mode) or any
     * plan with zero shuffle and zero state. The price of
     * statelessness is the per-row O(distinct×occurrences) HOF scan
     * the batch form's explode+aggregate deliberately avoids — fine
@@ -1677,9 +1676,8 @@ object TextAnalysis {
   /** Column-append scoring half of [[dsirWeights]]: the SAME
     * embedding + index-order fold (bit-identical expression types, so
     * scores equal the in-plan fit to the last bit), with the fitted
-    * totals as plan LITERALS — row-local and join-free, so it drops
-    * into a streaming stage
-    * ([[graft.streaming.StreamingDedup.dsirScoreStage]]) or any
+    * totals as plan LITERALS — row-local and join-free, so it
+    * applies to a streaming frame unchanged (any output mode) or any
     * batch plan with zero shuffle and zero state. Docs with zero
     * content tokens are dropped (the model is undefined on them),
     * matching [[dsirWeights]].
@@ -2274,11 +2272,11 @@ object TextAnalysis {
   /** Column-append form of [[lrQualityGate]]: the same embedding +
     * dot-product chain (bit-identical expressions), keeping EVERY
     * input column and appending `lr_score`/`keep` — join-free and
-    * row-local, so it drops into a streaming stage
-    * ([[graft.streaming.StreamingDedup.modelGateStage]]) or any plan
-    * that needs the gate alongside the original columns without a
-    * doc-id join. Docs with zero content tokens are dropped (the
-    * embedding is undefined), matching lrQualityGate.
+    * row-local, so it applies to a streaming frame unchanged (zero
+    * state, any output mode) or any plan that needs the gate
+    * alongside the original columns without a doc-id join. Docs with
+    * zero content tokens are dropped (the embedding is undefined),
+    * matching lrQualityGate.
     */
   def withLrGate(df: DataFrame, text: String, dim: Int = 32,
       bias: Double = 0.0): DataFrame = {
@@ -3048,8 +3046,8 @@ object TextAnalysis {
     * query terms). The per-term weight is the SAME rational no-libm
     * IEEE tree as [[bm25TopK]] with the fitted (df, n, tot) as plan
     * literals; tf is the row's own token count of the term — no
-    * join, no shuffle, no state, so the stage drops into a stream
-    * ([[graft.streaming.StreamingDedup.bm25ScoreStage]]) unchanged.
+    * join, no shuffle, no state, so it applies to a streaming frame
+    * unchanged, in any output mode.
     */
   def withBm25Score(df: DataFrame, text: String,
       model: Bm25Model): DataFrame = {
@@ -3481,16 +3479,28 @@ object TextAnalysis {
     // by the corpus vocabulary, not the token stream — measured 12.1
     // -> 3.4 s at sf0.1) and occurrences pick their stats up via a
     // word-keyed join the optimizer is free to broadcast.
+    docWordStats(df, text, id, base =>
+      base.select(explode(col("__ws")).as("__w")).distinct()
+        .crossJoin(broadcast(vm))
+        .withColumn("__s", expr(counted))
+        .select(col("__w"), col("__s.n").as("__n"),
+          col("__s.unk").as("__unk"), col("__s.seg").as("__seg")))
+  }
+
+  /** Doc-grain re-attach of memoized per-word tokenizer stats: `stats`
+    * maps the (id, `__ws` word array) base frame to one row per
+    * distinct word (`__w`, `__n` pieces, `__unk`, `__seg`); each doc
+    * gets n_words, the summed n_pieces/n_unk over its occurrences,
+    * pieces-per-word ppm, and its first word's segmentation.
+    */
+  private def docWordStats(df: DataFrame, text: String, id: String,
+      stats: DataFrame => DataFrame): DataFrame = {
     val base = df.select(col(id),
       expr(s"filter(split(lower($text), ' '), t -> t != '')")
         .as("__ws"))
-    val stats = base.select(explode(col("__ws")).as("__w")).distinct()
-      .crossJoin(broadcast(vm))
-      .withColumn("__s", expr(counted))
-      .select(col("__w"), col("__s.n").as("__n"),
-        col("__s.unk").as("__unk"), col("__s.seg").as("__seg"))
+    val words = stats(base)
     val occ = base.select(col(id), explode(col("__ws")).as("__w"))
-      .join(stats, Seq("__w"))
+      .join(words, Seq("__w"))
       .groupBy(col(id))
       .agg(sum(col("__n")).as("n_pieces"),
         sum(col("__unk")).as("n_unk"))
@@ -3498,7 +3508,7 @@ object TextAnalysis {
       .withColumn("n_words", expr("CAST(size(__ws) AS BIGINT)"))
       .withColumn("__w1", expr("try_element_at(__ws, 1)"))
       .join(occ, Seq(id), "left")
-      .join(stats.select(col("__w").as("__w1"),
+      .join(words.select(col("__w").as("__w1"),
         col("__seg").as("__seg1")), Seq("__w1"), "left")
       .select(col(id), col("n_words"),
         coalesce(col("n_pieces"), lit(0L)).as("n_pieces"),
@@ -3930,26 +3940,7 @@ object TextAnalysis {
       maxWordLen)
       .select(col("word").as("__w"), col("n_pieces").as("__n"),
         col("n_unk").as("__unk"), col("seg").as("__seg"))
-    val base = df.select(col(id),
-      expr(s"filter(split(lower($text), ' '), t -> t != '')")
-        .as("__ws"))
-    val occ = base.select(col(id), explode(col("__ws")).as("__w"))
-      .join(stats, Seq("__w"))
-      .groupBy(col(id))
-      .agg(sum(col("__n")).as("n_pieces"),
-        sum(col("__unk")).as("n_unk"))
-    base
-      .withColumn("n_words", expr("CAST(size(__ws) AS BIGINT)"))
-      .withColumn("__w1", expr("try_element_at(__ws, 1)"))
-      .join(occ, Seq(id), "left")
-      .join(stats.select(col("__w").as("__w1"),
-        col("__seg").as("__seg1")), Seq("__w1"), "left")
-      .select(col(id), col("n_words"),
-        coalesce(col("n_pieces"), lit(0L)).as("n_pieces"),
-        coalesce(col("n_unk"), lit(0L)).as("n_unk"),
-        expr("coalesce(n_pieces, 0L) * 1000000L " +
-          "DIV greatest(n_words, 1L)").as("ppw_ppm"),
-        coalesce(col("__seg1"), lit("")).as("seg_first"))
+    docWordStats(df, text, id, _ => stats)
   }
 
   /** HTML entity decoding for crawl text — the cleanup step between
@@ -4422,10 +4413,12 @@ object TextAnalysis {
     *     trim;
     *   - `n_chars_raw` / `n_chars_norm` (codepoint counts) and
     *     `norm_changed` for curation-funnel accounting.
-    * Row-local, no shuffle; the NFC fast path (`isNormalized`) makes
-    * already-clean ASCII rows allocation-free. NFC (not NFKC) is the
-    * operator form because it is loss-less (no compatibility
-    * folding) and oracle-mirrorable (`nfc_normalize`); the NFKC
+    * Row-local, no shuffle, zero state (so it applies to a streaming
+    * frame unchanged, in any output mode); the NFC fast path
+    * (`isNormalized`) makes already-clean ASCII rows allocation-free.
+    * NFC (not NFKC) is the operator form because it is loss-less (no
+    * compatibility folding) and oracle-mirrorable (`nfc_normalize`);
+    * the NFKC
     * compatibility fold is exposed separately as [[NfkcNormalizeExpr]]
     * (`graft_nfkc`) and pinned by spec.
     */
@@ -4574,9 +4567,8 @@ object TextAnalysis {
     * from-class erasure count. Running it before fingerprinting /
     * dedup makes an obfuscated duplicate hash onto its clean
     * original — the recall the substitution was designed to destroy.
-    * Row-local inside whole-stage codegen; zero state;
-    * streaming twin [[graft.streaming.StreamingDedup
-    * .confusableStage]].
+    * Row-local inside whole-stage codegen with zero state, so it
+    * applies to a streaming frame unchanged, in any output mode.
     */
   def confusableFold(df: DataFrame, text: String): DataFrame = {
     val clash = Seq("folded_text", "n_folded")

@@ -326,7 +326,9 @@ object UrlOps {
     * broadcasts it), then a per-URL rank over that URL's matched
     * rules only — bounded by rules-per-host, never the frontier.
     * Appends `allowed`, `matched_rule` ('' when none),
-    * `matched_len`.
+    * `matched_len`. On a streaming frontier the rules join is a
+    * stream-static join with zero state, so the gate applies
+    * unchanged in append mode.
     */
   def robotsGate(df: DataFrame, url: String,
       rules: DataFrame): DataFrame = {

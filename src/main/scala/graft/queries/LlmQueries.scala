@@ -1425,25 +1425,17 @@ object LlmQueries {
     "media_dispatch" -> ((s, d) => {
       val sp = s
       import sp.implicits._
-      val payloads = t(s, d, "documents")
-        .select(col("doc_id").cast("long"),
-          substring(col("text"), 1, 192).as("__pfx"))
-        .as[(Long, String)]
+      val payloads = Multimodal.prefixes(t(s, d, "documents"), "text",
+          "doc_id", 192)
         .map { case (id, pfx) =>
-          val cps = pfx.codePoints().toArray
           val payload = (id % 3) match {
             case 0 =>
-              val v = Array.tabulate(192)(j =>
-                if (j < cps.length) cps(j) % 256 else 0)
-              val pixels = Array.tabulate(64)(i =>
-                (v(3 * i) << 16) | (v(3 * i + 1) << 8) | v(3 * i + 2))
               Multimodal.encodeBmp(Multimodal.DecodedImage(8, 8,
-                pixels))
+                Multimodal.rgbPixels(Multimodal.codepointBytes(pfx, 192),
+                  0)))
             case 1 =>
-              val ss = Array.tabulate(64)(j =>
-                (((if (j < cps.length) cps(j) % 256 else 0) - 128)
-                  * 256).toShort)
-              Multimodal.encodeWav(Multimodal.DecodedAudio(8000, ss))
+              Multimodal.encodeWav(Multimodal.DecodedAudio(8000,
+                Multimodal.pcmSamples(Multimodal.codepointBytes(pfx, 64))))
             case _ => pfx.getBytes("UTF-8")
           }
           (id, payload)

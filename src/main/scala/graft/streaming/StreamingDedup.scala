@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.llm.{Dedup, PolyHashColumns, TextAnalysis}
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -49,19 +49,6 @@ object StreamingDedup {
   def minhashBuckets(docs: DataFrame, text: String,
       id: String): DataFrame =
     Dedup.lshBuckets(Dedup.minhashSignatures(docs, text, id), id)
-
-  /** Stateless streaming span-gram stage: every n-token window's
-    * (id, win_start, gram) per incoming document — the streaming
-    * front half of span-level dedup (a window's gram depends only on
-    * its own row, so the stage is streaming-safe in any output mode
-    * with zero state). Incremental rows land in a gram-partitioned
-    * sink; repeated-gram detection and the scrub run as periodic
-    * batch jobs over it (cross-row by nature — kept out of the
-    * stream, same split as [[minhashBuckets]] vs pair judging).
-    */
-  def spanGramStage(docs: DataFrame, text: String, id: String,
-      n: Int = 20): DataFrame =
-    Dedup.spanGrams(docs, text, id, n)
 
   /** [[SpanGramRow]] plus the event time that drives state TTL. */
   case class SpanGramEvent(doc_id: Long, win_start: Long, gram: Long,
@@ -126,14 +113,15 @@ object StreamingDedup {
       gram: Long, keep: Boolean)
 
   /** The STATEFUL back half of streaming span-level dedup: "first
-    * occurrence wins across micro-batches". Consumes the stateless
-    * [[spanGramStage]] stream and decides, per window, keep (first
-    * time this gram is seen — its canonical occurrence) or drop
-    * (gram already seen in this or any earlier micro-batch). Within
-    * one micro-batch the tiebreak is the batch rule: lexicographically
-    * first (doc_id, win_start). When documents arrive in doc-id order
-    * the decisions equal the batch [[graft.llm.Dedup.nonCanonicalWindows]]
-    * exactly (spec-pinned), and feeding the drop set to
+    * occurrence wins across micro-batches". Consumes the
+    * [[graft.llm.Dedup.spanGrams]] stream and decides, per window,
+    * keep (first time this gram is seen — its canonical occurrence)
+    * or drop (gram already seen in this or any earlier micro-batch).
+    * Within one micro-batch the tiebreak is the batch rule:
+    * lexicographically first (doc_id, win_start). When documents
+    * arrive in doc-id order the decisions equal the batch
+    * [[graft.llm.Dedup.nonCanonicalWindows]] exactly (spec-pinned),
+    * and feeding the drop set to
     * [[graft.llm.Dedup.scrubApply]] reproduces `scrubSpans`
     * bit-for-bit.
     *
@@ -146,25 +134,31 @@ object StreamingDedup {
     */
   def spanScrubDecisions(grams: DataFrame)
       : Dataset[SpanGramDecision] = {
-    val spark = grams.sparkSession
-    import spark.implicits._
-    grams
+    import grams.sparkSession.implicits._
+    firstOccurrence(grams
       .selectExpr("CAST(doc_id AS LONG) AS doc_id",
         "CAST(win_start AS LONG) AS win_start", "gram")
-      .as[SpanGramRow]
-      .groupByKey(_.gram)
+      .as[SpanGramRow])(_.gram, r => (r.doc_id, r.win_start))(
+      (r, keep) => SpanGramDecision(r.doc_id, r.win_start, r.gram, keep))
+  }
+
+  /** First occurrence wins per key across micro-batches: a row's
+    * decision is true iff its key was never seen in an earlier
+    * micro-batch and the row sorts first under `order` in this one.
+    * State is one boolean per distinct key, with no timeout.
+    */
+  private def firstOccurrence[R: Encoder, K: Encoder, O: Ordering,
+      D: Encoder](rows: Dataset[R])(key: R => K, order: R => O)(
+      decide: (R, Boolean) => D): Dataset[D] = {
+    import rows.sparkSession.implicits._
+    rows.groupByKey(key)
       .flatMapGroupsWithState(OutputMode.Append(),
         GroupStateTimeout.NoTimeout)(
-        (gram: Long, rows: Iterator[SpanGramRow],
-            state: GroupState[Boolean]) => {
+        (_: K, rs: Iterator[R], state: GroupState[Boolean]) => {
           val seen = state.exists && state.get
           state.update(true)
-          val sorted = rows.toIndexedSeq
-            .sortBy(r => (r.doc_id, r.win_start))
-          sorted.iterator.zipWithIndex.map { case (r, i) =>
-            SpanGramDecision(r.doc_id, r.win_start, gram,
-              keep = !seen && i == 0)
-          }
+          rs.toIndexedSeq.sortBy(order).iterator.zipWithIndex
+            .map { case (r, i) => decide(r, !seen && i == 0) }
         })
   }
 
@@ -275,23 +269,11 @@ object StreamingDedup {
     */
   def cdcChunkDecisions(chunks: DataFrame)
       : Dataset[CdcChunkDecision] = {
-    val spark = chunks.sparkSession
-    import spark.implicits._
-    chunks.as[CdcChunkRow]
-      .groupByKey(_.chunk_hash)
-      .flatMapGroupsWithState(OutputMode.Append(),
-        GroupStateTimeout.NoTimeout)(
-        (h: String, rows: Iterator[CdcChunkRow],
-            state: GroupState[Boolean]) => {
-          val seen = state.exists && state.get
-          state.update(true)
-          val sorted = rows.toIndexedSeq
-            .sortBy(r => (r.doc_id, r.chunk_id))
-          sorted.iterator.zipWithIndex.map { case (r, i) =>
-            CdcChunkDecision(r.doc_id, r.chunk_id, r.chunk_hash,
-              r.chunk_len, keep = !seen && i == 0)
-          }
-        })
+    import chunks.sparkSession.implicits._
+    firstOccurrence(chunks.as[CdcChunkRow])(
+      _.chunk_hash, r => (r.doc_id, r.chunk_id))(
+      (r, keep) => CdcChunkDecision(r.doc_id, r.chunk_id, r.chunk_hash,
+        r.chunk_len, keep))
   }
 
   /** Stateless streaming curation gate: Gopher-style rule booleans +
@@ -311,187 +293,6 @@ object StreamingDedup {
       .filter(col("keep"))
       .drop(text)
 
-  /** Streaming MODEL gate: linear-classifier inference over the
-    * feature-hash embedding ([[TextAnalysis.withLrGate]]) as a
-    * live-feed stage. Entirely row-local and JOIN-FREE — token
-    * hashing, bucket counts, and the dot product are native/in-plan
-    * expressions and the weight vector rides as a literal — so the
-    * stage is streaming-safe in any output mode with zero state and
-    * no watermark, exactly like [[curationGate]]. This is the
-    * classifier filter a live corpus feed runs between the heuristic
-    * ingest gate and the stateful dedup stores. `keep` rides along
-    * un-filtered (one gate evaluation per row at the stage's own
-    * projection); a sink-side `.filter(col("keep"))` then operates
-    * on the stage's materialized output, not on a re-inlined
-    * embedding chain. Identical semantics on a batch frame
-    * (spec-pinned parity).
-    */
-  def modelGateStage(docs: DataFrame, text: String,
-      dim: Int = 32): DataFrame =
-    TextAnalysis.withLrGate(docs, text, dim)
-
-  /** Streaming AUDIO-FEATURE stage: run one of the real audio codec
-    * pipelines (PCM WAV / G.711 μ-law / A-law / IMA ADPCM / MDCT
-    * transform) over a live feed — each is a row-local typed map
-    * (encode → parse → decode → integer features per record, no
-    * shuffle, no state), so the BATCH pipeline applies to a
-    * streaming frame unchanged; this named stage only routes the
-    * codec choice. Emits the per-doc feature frame (doc_id +
-    * features), batch-parity spec-pinned.
-    */
-  def audioFeatureStage(docs: DataFrame, text: String, id: String,
-      codec: String = "adpcm"): DataFrame = codec match {
-    case "pcm" => graft.llm.Multimodal.wavPipeline(docs, text, id)
-    case "ulaw" => graft.llm.Multimodal.ulawPipeline(docs, text, id)
-    case "alaw" => graft.llm.Multimodal.alawPipeline(docs, text, id)
-    case "adpcm" => graft.llm.Multimodal.adpcmPipeline(docs, text, id)
-    case "mdct" => graft.llm.Multimodal.mdctPipeline(docs, text, id)
-    case other => throw new IllegalArgumentException(
-      s"audioFeatureStage: unknown codec '$other' " +
-        "(pcm | ulaw | alaw | adpcm | mdct)")
-  }
-
-  /** Streaming ENTROPY stage: append the char-bigram templatedness
-    * signal ([[TextAnalysis.charEntropy]]'s columns, bit-identical
-    * values) row-locally — zero shuffle, zero state, any output
-    * mode; the quality-gate family's cheapest member.
-    */
-  def entropyStage(docs: DataFrame, text: String): DataFrame =
-    TextAnalysis.withCharEntropy(docs, text)
-
-  /** Streaming DECONTAMINATION stage: flag live-feed docs that share
-    * an n-gram with a held-out eval set, with the eval set fitted
-    * offline into a bloom filter ([[graft.llm.Dedup.decontamBloom]])
-    * that rides the plan as a reference object — the fitted-artifact
-    * pattern ([[tokenizerStage]], [[dsirScoreStage]]). Row-local,
-    * join-free, zero state, any output mode; the bloom's no-false-
-    * negative guarantee means the stage can never PASS a
-    * contaminated doc (it may conservatively over-flag an `fpp`
-    * fraction). Spec-pinned: flags ⊇ the exact batch
-    * [[graft.llm.Dedup.decontaminate]] drop set, batch≡stream parity.
-    */
-  def decontamStage(docs: DataFrame, text: String,
-      bloom: org.apache.spark.util.sketch.BloomFilter, n: Int = 8)
-      : DataFrame =
-    graft.llm.Dedup.withContaminationFlag(docs, text, bloom, n)
-
-  /** Streaming IMAGE/VIDEO-FEATURE stage: the visual twin of
-    * [[audioFeatureStage]] — BMP (lossless raster), PNG (lossless
-    * compressed), JPEG (lossy DCT, tolerance-gated), or animated-GIF
-    * frame sampling, each a row-local typed map that applies to a
-    * streaming frame unchanged; this named stage routes the codec.
-    */
-  def imageFeatureStage(docs: DataFrame, text: String, id: String,
-      codec: String = "png"): DataFrame = codec match {
-    case "bmp" => graft.llm.Multimodal.bmpPipeline(docs, text, id)
-    case "png" => graft.llm.Multimodal.pngPipeline(docs, text, id)
-    case "jpeg" => graft.llm.Multimodal.jpegPipeline(docs, text, id)
-    case "gif" => graft.llm.Multimodal.gifPipeline(docs, text, id)
-    case "mcv" => graft.llm.Multimodal.mcvPipeline(docs, text, id)
-    // patchify is a stateless flatMap (4 rows per record) — still
-    // streaming-safe in any output mode, like the 1:1 stages
-    case "patchify" =>
-      graft.llm.Multimodal.patchifyPipeline(docs, text, id)
-    case other => throw new IllegalArgumentException(
-      s"imageFeatureStage: unknown codec '$other' " +
-        "(bmp | png | jpeg | gif | mcv | patchify)")
-  }
-
-  /** Streaming AUGMENTATION stage: deterministic hash-gated token
-    * dropout/duplication ([[graft.llm.TextAnalysis.augmentTokens]])
-    * over a live feed — row-local, zero state, any output mode, and
-    * reproducible under micro-batch retries precisely because the
-    * gates are per-(doc, position) hashes, not RNG (a random augment
-    * stage replays differently on retry and corrupts exactly-once
-    * sinks).
-    */
-  def augmentStage(docs: DataFrame, text: String, id: String)
-      : DataFrame =
-    graft.llm.TextAnalysis.augmentTokens(docs, text, id)
-
-  /** Streaming FILL-IN-THE-MIDDLE stage: apply
-    * [[TextAnalysis.fimSplit]]'s deterministic hash-derived
-    * prefix/middle/suffix cuts + PSM/SPM mode deal to a live feed —
-    * entirely row-local (the cuts come from the record's own content
-    * hash), zero state, join-free, any output mode. A late-arriving
-    * document gets exactly the split the batch pipeline would give
-    * it (spec-pinned parity), so a mixed batch/streaming loader
-    * never sees two different splits of one document.
-    */
-  def fimStage(docs: DataFrame, text: String, id: String)
-      : DataFrame =
-    TextAnalysis.fimSplit(docs, text, id)
-
-  /** Streaming MOJIBAKE-REPAIR stage: undo CP1252 double-encoding on
-    * a live feed with [[TextAnalysis.mojibakeFix]]'s pinned replace
-    * chain — entirely row-local (two literal-replace phases + two
-    * length diffs, no regex, no dictionary join), zero state, any
-    * output mode. A late-arriving document gets the identical repair
-    * and fix count the batch pipeline would give it (spec-pinned
-    * parity), so repaired text hashes — and therefore every dedup
-    * stage downstream — agree across the batch/streaming split.
-    */
-  def mojibakeStage(docs: DataFrame, text: String): DataFrame =
-    TextAnalysis.mojibakeFix(docs, text)
-
-  /** Streaming MACHINE-TEXT-TELEMETRY stage: append
-    * [[TextAnalysis.syntheticSignals]]'s bounded-window sentence
-    * burstiness columns to a live feed — row-local HOFs over the
-    * record's own text, zero state, any output mode; a late arrival
-    * gets the identical integer signals the batch pass computes
-    * (spec-pinned parity), so threshold gates downstream agree
-    * across the batch/streaming split.
-    */
-  def syntheticStage(docs: DataFrame, text: String): DataFrame =
-    TextAnalysis.syntheticSignals(docs, text)
-
-  /** Streaming HOMOGLYPH-FOLD stage: [[TextAnalysis.confusableFold]]
-    * on a live feed — one row-local translate pass, zero state, any
-    * output mode. Running it in front of the streaming dedup stages
-    * makes an obfuscated late duplicate hash onto its clean original
-    * exactly as the batch pipeline would (batch-parity pinned).
-    */
-  def confusableStage(docs: DataFrame, text: String): DataFrame =
-    TextAnalysis.confusableFold(docs, text)
-
-  /** Streaming REPETITION-GATE stage: append the Gopher within-doc
-    * repetition signals ([[TextAnalysis.docRepetition]]'s integer ppm
-    * columns) to a live feed — entirely row-local (per-record HOFs
-    * over the record's own lines/grams; a stream record is one
-    * bounded document, so the per-row scan the batch explode form
-    * avoids is the right trade here), zero state, any output mode.
-    * Values are integer-identical to the batch operator
-    * (spec-pinned).
-    */
-  def repetitionStage(docs: DataFrame, text: String): DataFrame =
-    TextAnalysis.withDocRepetition(docs, text)
-
-  /** Streaming DSIR-scoring stage: score a live document feed with an
-    * importance model already fitted offline on a reference corpus
-    * ([[TextAnalysis.dsirFit]]) — the data-selection analogue of
-    * [[tokenizerStage]]'s fitted-artifact pattern. The 2×dim fitted
-    * totals ride as plan literals and the bucket fold is row-local
-    * and join-free, so the stage is streaming-safe in any output
-    * mode with zero state and no watermark; scores are bit-identical
-    * to the batch [[TextAnalysis.dsirWeights]] fit on the same
-    * corpus (spec-pinned).
-    */
-  def dsirScoreStage(docs: DataFrame, text: String,
-      model: TextAnalysis.DsirModel): DataFrame =
-    TextAnalysis.withDsirScore(docs, text, model)
-
-  /** Streaming BM25-scoring stage: score a live feed against a
-    * retrieval model fitted offline ([[TextAnalysis.bm25Fit]]) — the
-    * fitted (term, df) pairs and corpus stats ride as plan literals,
-    * tf comes from the row's own tokens, and the per-term weights are
-    * micro-pinned longs summed in-row, so the stage is row-local,
-    * join-free, zero-state, any output mode; scores are bit-identical
-    * to the batch [[TextAnalysis.withBm25Score]] (spec-pinned).
-    */
-  def bm25ScoreStage(docs: DataFrame, text: String,
-      model: TextAnalysis.Bm25Model): DataFrame =
-    TextAnalysis.withBm25Score(docs, text, model)
-
   /** Streaming TOKENIZER stage: apply an already-fitted BPE merge
     * table ([[TextAnalysis.bpeFitMerges]], fitted offline on a
     * reference corpus) to a live document feed, appending
@@ -502,9 +303,9 @@ object StreamingDedup {
     * shuffle-dedupe distinct words, so unlike the batch apply each
     * occurrence folds its own word — the VALUES are identical), so
     * the stage is streaming-safe in any output mode with zero state
-    * and no watermark, like [[modelGateStage]]. Docs with zero
-    * content tokens ride through with n_bpe_tokens = 0 (the batch
-    * apply DROPS them — a count hook must not drop rows).
+    * and no watermark. Docs with zero content tokens ride through
+    * with n_bpe_tokens = 0 (the batch apply DROPS them — a count hook
+    * must not drop rows).
     */
   def tokenizerStage(docs: DataFrame, text: String,
       merges: Seq[TextAnalysis.BpeMerge]): DataFrame =
@@ -565,116 +366,12 @@ object StreamingDedup {
       .groupBy(window(col(ts), windowLen).as("win"), col(source))
       .agg(sum(col("n_bpe_tokens")).as("n_tokens"))
 
-  /** Streaming LANGUAGE-ID stage: classify a live document feed
-    * against an offline-fitted [[TextAnalysis.LangIdModel]] — the
-    * centroids ride as plan literals, every per-element step is a
-    * native expression, so the stage is row-local, join-free,
-    * zero-state, any output mode; predictions are bit-identical to
-    * the batch [[TextAnalysis.withLangId]] (spec-pinned).
-    */
-  def langIdStage(docs: DataFrame, text: String,
-      model: TextAnalysis.LangIdModel = TextAnalysis.langIdFit())
-      : DataFrame =
-    TextAnalysis.withLangId(docs, text, model)
-
-  /** Streaming URL-PARSE stage: scheme/host/port/path extraction +
-    * registered-domain folding on a live crawl feed
-    * ([[graft.llm.UrlOps.withUrlParts]] — regex projections and a
-    * literal suffix table, so row-local/zero-state like the other
-    * stateless stages). The host-grain caps/stats downstream are
-    * batch rebalancers; this stage gives the stream the keys they
-    * need.
-    */
-  def urlParseStage(docs: DataFrame, url: String): DataFrame =
-    graft.llm.UrlOps.withUrlParts(docs, url)
-
-  /** Streaming URL-CANONICALIZATION stage: tracking-param strip,
-    * bytewise param sort, default-port/fragment/trailing-slash/case
-    * folds on a live crawl feed ([[graft.llm.UrlOps
-    * .canonicalizeUrl]] — string-rewrite projections only, so
-    * row-local/zero-state). Feed `canon_url` into the
-    * watermark-bounded content dedup ([[dedupByContent]] keyed on
-    * the canon key instead of the body) for the streaming form of
-    * the url-grain merge.
-    */
-  def urlCanonStage(docs: DataFrame, url: String): DataFrame =
-    graft.llm.UrlOps.canonicalizeUrl(docs, url)
-
-  /** Streaming ANCHOR-EXTRACTION stage: one (dst_dom, anchor) row
-    * per `<a>` tag on a live feed ([[graft.llm.UrlOps.anchorPairs]]
-    * — regex projections + the literal suffix table, row-local,
-    * zero-state). The per-domain top-k table downstream is a batch
-    * rebalancer over this stream's output.
-    */
-  def anchorStage(docs: DataFrame, text: String): DataFrame =
-    graft.llm.UrlOps.anchorPairs(docs, text)
-
-  /** Streaming MAIN-CONTENT stage: the text/link-density block rule
-    * ([[graft.llm.TextAnalysis.mainContent]] — HOF projections only,
-    * row-local, zero-state) on a live crawl feed. The natural place
-    * in a streaming curation chain is FIRST: chrome stripped before
-    * langId/quality/dedup see the page, so their signals score the
-    * body instead of the navigation. Any output mode; bit-identical
-    * to the batch form (spec-pinned).
-    */
-  def mainContentStage(docs: DataFrame, html: String): DataFrame =
-    graft.llm.TextAnalysis.mainContent(docs, html)
-
-  /** Streaming UNICODE-NORMALIZATION stage
-    * ([[graft.llm.TextAnalysis.normalizeText]]: NFC → casefold →
-    * whitespace/control fold — row-local, zero-state, any output
-    * mode). Belongs at the very FRONT of a streaming curation chain,
-    * before anything hashes or equality-joins text: composed and
-    * decomposed spellings of the same grapheme must collide in the
-    * watermark dedup state, not duplicate it. Bit-identical to the
-    * batch form (spec-pinned).
-    */
-  def normalizeStage(docs: DataFrame, text: String): DataFrame =
-    graft.llm.TextAnalysis.normalizeText(docs, text)
-
-  /** Streaming ROBOTS GATE: RFC 9309 longest-prefix fetch decisions
-    * on a live frontier ([[graft.llm.UrlOps.robotsGate]] — one
-    * stream-static join against the per-host policy table, then a
-    * row-local precedence fold; zero state, append mode). The policy
-    * table is the batch-refreshed side input a crawler maintains out
-    * of band.
-    */
-  def robotsStage(docs: DataFrame, url: String,
-      rules: DataFrame): DataFrame =
-    graft.llm.UrlOps.robotsGate(docs, url, rules)
-
-  /** Streaming SHARD-ASSIGNMENT stage: [[TextAnalysis.withShard]]'s
-    * row-local (log2 size class + content hash) assignment on a
-    * live feed — the partitionBy("shard") key for a streaming
-    * parquet sink, so each micro-batch appends into the same
-    * size-stratified layout the batch [[TextAnalysis.shardPlan]]
-    * reports on. Zero state, any output mode, bit-identical to the
-    * batch assignment (spec-pinned).
-    */
-  def shardStage(docs: DataFrame, text: String, id: String,
-      nShards: Int): DataFrame =
-    TextAnalysis.withShard(docs, text, id, nShards)
-
-  /** Streaming LICENSE-MARKER gate: classify a live document feed
-    * against a fitted marker dictionary ([[TextAnalysis.licenseScan]]
-    * — the dictionary rides inside one Aho–Corasick codegen
-    * expression, so the stage is row-local, join-free, zero-state,
-    * any output mode; verdicts are bit-identical to the batch scan
-    * on the same rows, spec-pinned). The live twin of the code-
-    * corpus curation gate: copyleft-flagged documents divert before
-    * they enter a training shard.
-    */
-  def licenseScanStage(docs: DataFrame, text: String, id: String,
-      markers: Seq[(String, String)],
-      copyleft: Set[String] = Set("agpl", "gpl")): DataFrame =
-    TextAnalysis.licenseScan(docs, text, id, markers, copyleft)
-
   /** Streaming RELEASE-GATE stage (round-20): the row-local three of
     * [[graft.CurationJob.releaseGate]]'s four compliance gates over a
     * live document feed — the Aho–Corasick license verdict (marker
     * dictionary as plan literals), PII regex counts, and bloom
     * decontamination against the offline-fitted eval set
-    * ([[decontamStage]]'s artifact pattern) — chained over ONE frame
+    * ([[graft.llm.Dedup.withContaminationFlag]]) — chained over ONE frame
     * (no join anywhere, so no stream-stream join), emitting the
     * per-doc verdict columns plus `released_rowlocal` (the
     * conjunction of the three). The fourth gate, metadata
@@ -706,8 +403,6 @@ object StreamingDedup {
       .drop(text)
   }
 
-  /** One (group, bucket, rho) HLL observation from the stateless
-    * front half of [[hllStage]]. */
   /** One Count-Min increment: a token occurrence mapped to one
     * (depth, cell) counter. */
   case class CmsEvent(depth: Int, cell: Long)
@@ -991,6 +686,8 @@ object StreamingDedup {
         })
   }
 
+  /** One (group, bucket, rho) HLL observation from the stateless
+    * front half of [[hllStage]]. */
   case class HllEvent(grp: String, bkt: Long, rho: Int)
 
   /** Live distinct-count estimate for one group. */
@@ -1064,7 +761,8 @@ object StreamingDedup {
 
   /** Streaming UNIGRAM-TOKENIZE stage: per-doc Viterbi piece/unk/
     * fertility accounting on a live feed against a batch-fitted
-    * vocabulary (the side-input discipline of [[robotsStage]] —
+    * vocabulary (the side-input discipline of
+    * [[graft.llm.UrlOps.robotsGate]] —
     * tokenizer vocabularies are fit offline and shipped to the
     * edge). Stateless and row-local: the batch form's distinct-word
     * memoization is a self-join a stream cannot do, so the DP runs

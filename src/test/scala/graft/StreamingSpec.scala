@@ -2,6 +2,7 @@ package graft
 
 import graft.engine.Resample
 import graft.streaming.StreamingResample
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types._
@@ -14,11 +15,45 @@ import org.scalatest.funsuite.AnyFunSuite
 class StreamingSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
+  import scala.math.Ordering.Double.TotalOrdering
 
   private val schema = StructType(Seq(
     StructField("k", StringType),
     StructField("ts", TimestampType),
     StructField("v", DoubleType)))
+
+  private val parityRuns = new java.util.concurrent.atomic.AtomicInteger
+
+  /** Runs `op` over a parquet stream that takes `first` as one
+    * micro-batch and the `late` arrival as the next (memory sink with
+    * a checkpoint, append mode), and over a batch read of the same
+    * files. Returns (streamed, batch), every row mapped by `tup` and
+    * sorted.
+    */
+  private def streamAndBatch[T: Ordering](first: DataFrame,
+      late: DataFrame)(op: DataFrame => DataFrame)(tup: Row => T)
+      : (Seq[T], Seq[T]) = {
+    val dir = java.nio.file.Files.createTempDirectory("par_in").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("par_ck").toString
+    val sink = s"parity_out_${parityRuns.incrementAndGet()}"
+    val inSchema = StructType(first.schema.map(_.copy(nullable = true)))
+    first.write.mode("append").parquet(dir)
+    val q = op(spark.readStream.schema(inSchema).parquet(dir))
+      .writeStream.format("memory").queryName(sink)
+      .option("checkpointLocation", ckpt)
+      .outputMode("append").start()
+    try {
+      q.processAllAvailable()
+      late.write.mode("append").parquet(dir)
+      q.processAllAvailable()
+    } finally q.stop()
+    def rows(df: DataFrame): Seq[T] = df.collect().toSeq.map(tup).sorted
+    (rows(spark.table(sink)),
+      rows(op(spark.read.schema(inSchema).parquet(dir))))
+  }
+
+  private def docs(rs: (Long, String)*): DataFrame =
+    rs.toDF("doc_id", "text")
 
   private def writeBatch(dir: String, rows: (String, String, Double)*)
       : Unit =
@@ -265,34 +300,14 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming span-gram stage equals the batch flow across micro-batches") {
     import graft.llm.Dedup
-    import graft.streaming.StreamingDedup
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    val dir = java.nio.file.Files.createTempDirectory("sg_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("sg_ck").toString
     val span = (1 to 25).map(i => s"w$i").mkString(" ")
-    Seq((1L, span)).toDF("doc_id", "text")
-      .write.mode("append").parquet(dir)
-    val stream = spark.readStream.schema(docSchema).parquet(dir)
-    val q = StreamingDedup.spanGramStage(stream, "text", "doc_id")
-      .writeStream.format("memory").queryName("sg_out")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    q.processAllAvailable()
     // a later micro-batch carrying the same 25-token span must emit
-    // identical grams (stateless stage: grams depend only on the row)
-    Seq((2L, span + " trailing extras beyond the shared run"))
-      .toDF("doc_id", "text").write.mode("append").parquet(dir)
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("sg_out").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted
-    val batch = Dedup.spanGrams(
-      spark.read.schema(docSchema).parquet(dir), "text", "doc_id")
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted
-    assert(streamed.toSeq === batch.toSeq)
+    // identical grams (stateless: grams depend only on the row)
+    val (streamed, batch) = streamAndBatch(docs(1L -> span),
+        docs(2L -> (span + " trailing extras beyond the shared run")))(
+      Dedup.spanGrams(_, "text", "doc_id"))(
+      r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    assert(streamed === batch)
     assert(streamed.nonEmpty)
     // the shared windows collide: doc2's first 6 window grams equal
     // doc1's (25-token span, 20-token windows)
@@ -304,37 +319,21 @@ class StreamingSpec extends AnyFunSuite {
   test("streaming minhash bucket stage equals the batch flow across micro-batches") {
     import graft.llm.Dedup
     import graft.streaming.StreamingDedup
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    def rows(dir: String, docs: (Long, String)*): Unit =
-      docs.toSeq.toDF("doc_id", "text")
-        .write.mode("append").parquet(dir)
-    val dir = java.nio.file.Files.createTempDirectory("mh_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("mh_ck").toString
     val d1 = "spark engines shuffle partitions and broadcast small tables"
     val d2 = "an entirely different document about pasta and tomato sauce"
-    rows(dir, (1L, d1), (2L, d2))
-    val stream = spark.readStream.schema(docSchema).parquet(dir)
-    val q = StreamingDedup.minhashBuckets(stream, "text", "doc_id")
-      .writeStream.format("memory").queryName("mh_out")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    q.processAllAvailable()
     // a near-duplicate of d1 arriving in a LATER micro-batch must get
     // the same band keys the batch flow assigns it (stateless stage —
     // bucket keys depend only on the row)
-    rows(dir, (3L, d1.replace("small", "tiny")))
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("mh_out").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sorted
-    val batch = Dedup.lshBuckets(Dedup.minhashSignatures(
-      spark.read.schema(docSchema).parquet(dir), "text", "doc_id"),
-      "doc_id").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sorted
-    assert(streamed.toSeq === batch.toSeq)
+    val first = docs(1L -> d1, 2L -> d2)
+    val late = docs(3L -> d1.replace("small", "tiny"))
+    val (streamed, batch) = streamAndBatch(first, late)(
+      StreamingDedup.minhashBuckets(_, "text", "doc_id"))(
+      r => (r.getLong(0), r.getInt(1), r.getLong(2)))
+    assert(streamed === batch)
     assert(streamed.nonEmpty)
+    assert(streamed === Dedup.lshBuckets(Dedup.minhashSignatures(
+      first.union(late), "text", "doc_id"), "doc_id").collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).sorted.toSeq)
     // docs 1 and 3 (near-dups) must collide on at least one band key;
     // doc 2 must not collide with either on any band
     val byBand = streamed.groupBy(_._2)
@@ -441,332 +440,163 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming curation gate equals the batch form; rejects and redacts") {
     import graft.streaming.StreamingDedup
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    def rows(dir: String, docs: (Long, String)*): Unit =
-      docs.toSeq.toDF("doc_id", "text")
-        .write.mode("append").parquet(dir)
-    val dir = java.nio.file.Files.createTempDirectory("cg_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("cg_ck").toString
     val longDoc = ("retail units sold per store and week " * 8).trim +
       " mail me at ops@example.com"
-    rows(dir, (1L, longDoc), (2L, "too short to keep"))
-    val stream = spark.readStream.schema(docSchema).parquet(dir)
-    val q = StreamingDedup.curationGate(stream, "text",
-        minTokens = 40)
-      .writeStream.format("memory").queryName("cg_out")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    q.processAllAvailable()
-    rows(dir, (3L, longDoc + " second batch arrival"))
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("cg_out")
-      .select("doc_id", "redacted").collect()
-      .map(r => (r.getLong(0), r.getString(1))).sorted
+    val (streamed, batch) = streamAndBatch(
+        docs(1L -> longDoc, 2L -> "too short to keep"),
+        docs(3L -> (longDoc + " second batch arrival")))(
+      StreamingDedup.curationGate(_, "text", minTokens = 40)
+        .select("doc_id", "redacted"))(
+      r => (r.getLong(0), r.getString(1)))
     // short doc rejected; survivors have the email scrubbed
-    assert(streamed.map(_._1).toSeq === Seq(1L, 3L))
+    assert(streamed.map(_._1) === Seq(1L, 3L))
     assert(streamed.forall(_._2.contains("[EMAIL]")))
     assert(streamed.forall(!_._2.contains("ops@example.com")))
     // batch parity: same rows, same redaction
-    val batch = StreamingDedup.curationGate(
-      spark.read.schema(docSchema).parquet(dir), "text",
-      minTokens = 40)
-      .select("doc_id", "redacted").collect()
-      .map(r => (r.getLong(0), r.getString(1))).sorted
-    assert(streamed.toSeq === batch.toSeq)
+    assert(streamed === batch)
   }
 
   test("streaming model gate equals the batch LR gate; join-free " +
       "and stateless") {
-    import graft.streaming.StreamingDedup
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    val dir = java.nio.file.Files.createTempDirectory("mg_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("mg_ck").toString
-    def rows(docs: (Long, String)*): Unit =
-      docs.toSeq.toDF("doc_id", "text")
-        .write.mode("append").parquet(dir)
-    rows((1L, "retail units sold per store and week in region"),
-      (2L, "   "), // zero content tokens -> dropped by the gate
-      (3L, "plainly different vocabulary drives a different score"))
-    val stream = spark.readStream.schema(docSchema).parquet(dir)
-    val q = StreamingDedup.modelGateStage(stream, "text")
-      .writeStream.format("memory").queryName("mg_out")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    q.processAllAvailable()
-    rows((4L, "second micro batch arrives with more retail text"))
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("mg_out")
-      .select("doc_id", "text", "lr_score", "keep").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getDouble(2),
-        r.getBoolean(3))).sortBy(_._1)
+    import graft.llm.TextAnalysis
+    val first = docs(1L -> "retail units sold per store and week in region",
+      2L -> "   ", // zero content tokens -> dropped by the gate
+      3L -> "plainly different vocabulary drives a different score")
+    val late = docs(4L -> "second micro batch arrives with more retail text")
+    val (streamed, batch) = streamAndBatch(first, late)(
+      TextAnalysis.withLrGate(_, "text")
+        .select("doc_id", "text", "lr_score", "keep"))(
+      r => (r.getLong(0), r.getString(1), r.getDouble(2),
+        r.getBoolean(3)))
     // zero-token doc dropped; original columns ride along
-    assert(streamed.map(_._1).toSeq === Seq(1L, 3L, 4L))
+    assert(streamed.map(_._1) === Seq(1L, 3L, 4L))
     // batch parity: identical scores and keep decisions, and the
     // scores agree with the id-keyed batch gate
-    val batch = StreamingDedup.modelGateStage(
-      spark.read.schema(docSchema).parquet(dir), "text")
-      .select("doc_id", "text", "lr_score", "keep").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getDouble(2),
-        r.getBoolean(3))).sortBy(_._1)
-    assert(streamed.toSeq === batch.toSeq)
-    val gate = graft.llm.TextAnalysis.lrQualityGate(
-      spark.read.schema(docSchema).parquet(dir), "text", "doc_id")
+    assert(streamed === batch)
+    val gate = TextAnalysis.lrQualityGate(first.union(late), "text",
+        "doc_id")
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(streamed.forall { case (id, _, s, _) => gate(id) == s })
   }
 
   test("streaming audio-feature stage equals the batch codec " +
       "pipelines; row-local and stateless") {
-    import graft.streaming.StreamingDedup
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    val dir = java.nio.file.Files.createTempDirectory("au_in").toString
-    def rows(docs: (Long, String)*): Unit =
-      docs.toSeq.toDF("doc_id", "text")
-        .write.mode("append").parquet(dir)
-    rows((1L, "retail units sold per store and week"),
-      (2L, "zz" * 40))
-    for (codec <- Seq("ulaw", "adpcm", "mdct")) {
-      val ckpt = java.nio.file.Files.createTempDirectory(
-        s"au_ck_$codec").toString
-      val stream = spark.readStream.schema(docSchema).parquet(dir)
-      val q = StreamingDedup.audioFeatureStage(stream, "text",
-        "doc_id", codec)
-        .writeStream.format("memory").queryName(s"au_out_$codec")
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").start()
-      q.processAllAvailable()
-      if (codec == "ulaw") rows((3L, "a third doc arrives"))
-      q.processAllAvailable()
-      q.stop()
-      val streamed = spark.table(s"au_out_$codec")
-        .select("doc_id", "sumsq_recon", "max_abs_err",
-          "roundtrip_ok").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getBoolean(3))).sortBy(_._1)
-      val batch = StreamingDedup.audioFeatureStage(
-        spark.read.schema(docSchema).parquet(dir), "text", "doc_id",
-        codec)
-        .select("doc_id", "sumsq_recon", "max_abs_err",
-          "roundtrip_ok").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getBoolean(3))).sortBy(_._1)
-      assert(streamed.toSeq === batch.toSeq, codec)
+    import graft.llm.Multimodal
+    for ((codec, pipeline) <- Seq(("ulaw", Multimodal.ulawPipeline _),
+        ("adpcm", Multimodal.adpcmPipeline _),
+        ("mdct", Multimodal.mdctPipeline _))) {
+      val (streamed, batch) = streamAndBatch(
+          docs(1L -> "retail units sold per store and week",
+            2L -> ("zz" * 40)),
+          docs(3L -> "a third doc arrives"))(
+        pipeline(_, "text", "doc_id")
+          .select("doc_id", "sumsq_recon", "max_abs_err",
+            "roundtrip_ok"))(
+        r => (r.getLong(0), r.getLong(1), r.getLong(2),
+          r.getBoolean(3)))
+      assert(streamed === batch, codec)
       assert(streamed.forall(_._4), codec)
-    }
-    intercept[IllegalArgumentException] {
-      StreamingDedup.audioFeatureStage(
-        spark.read.schema(docSchema).parquet(dir), "text", "doc_id",
-        "mp3")
     }
   }
 
   test("streaming image-feature stage equals the batch codec " +
       "pipelines (png lossless, gif frame-sampled)") {
-    import graft.streaming.StreamingDedup
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    val dir = java.nio.file.Files.createTempDirectory("im_in").toString
-    def rows(docs: (Long, String)*): Unit =
-      docs.toSeq.toDF("doc_id", "text")
-        .write.mode("append").parquet(dir)
-    rows((1L, "retail units sold per store and week in region nine"),
-      (2L, "zq" * 400))
-    for (codec <- Seq("png", "gif", "mcv")) {
-      val ckpt = java.nio.file.Files.createTempDirectory(
-        s"im_ck_$codec").toString
-      val stream = spark.readStream.schema(docSchema).parquet(dir)
-      val q = StreamingDedup.imageFeatureStage(stream, "text",
-        "doc_id", codec)
-        .writeStream.format("memory").queryName(s"im_out_$codec")
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").start()
-      q.processAllAvailable()
-      q.stop()
-      val cols = Seq("doc_id", "roundtrip_ok")
-      val streamed = spark.table(s"im_out_$codec")
-        .select(cols.head, cols.tail: _*).collect()
-        .map(r => (r.getLong(0), r.getBoolean(1))).sortBy(_._1)
-      val batch = StreamingDedup.imageFeatureStage(
-        spark.read.schema(docSchema).parquet(dir), "text", "doc_id",
-        codec)
-        .select(cols.head, cols.tail: _*).collect()
-        .map(r => (r.getLong(0), r.getBoolean(1))).sortBy(_._1)
-      assert(streamed.toSeq === batch.toSeq, codec)
-      assert(streamed.map(_._1).toSeq === Seq(1L, 2L), codec)
+    import graft.llm.Multimodal
+    for ((codec, pipeline) <- Seq(("png", Multimodal.pngPipeline _),
+        ("gif", Multimodal.gifPipeline _),
+        ("mcv", Multimodal.mcvPipeline _))) {
+      val (streamed, batch) = streamAndBatch(
+          docs(1L -> "retail units sold per store and week in region nine"),
+          docs(2L -> ("zq" * 400)))(
+        pipeline(_, "text", "doc_id").select("doc_id", "roundtrip_ok"))(
+        r => (r.getLong(0), r.getBoolean(1)))
+      assert(streamed === batch, codec)
+      assert(streamed.map(_._1) === Seq(1L, 2L), codec)
       assert(streamed.forall(_._2), codec)
-    }
-    intercept[IllegalArgumentException] {
-      StreamingDedup.imageFeatureStage(
-        spark.read.schema(docSchema).parquet(dir), "text", "doc_id",
-        "webp")
     }
   }
 
   test("streaming patchify stage (flatMap, 4 rows/record) equals the " +
       "batch pipeline across micro-batches") {
-    import graft.streaming.StreamingDedup
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    val dir = java.nio.file.Files.createTempDirectory("pf_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("pf_ck").toString
-    def rows(docs: (Long, String)*): Unit =
-      docs.toSeq.toDF("doc_id", "text")
-        .write.mode("append").parquet(dir)
-    rows((1L, "retail units sold per store and week in region nine"))
-    val stream = spark.readStream.schema(docSchema).parquet(dir)
-    val q = StreamingDedup.imageFeatureStage(stream, "text", "doc_id",
-        "patchify")
-      .writeStream.format("memory").queryName("pf_out")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    q.processAllAvailable()
-    rows((2L, "zq" * 400))
-    q.processAllAvailable()
-    q.stop()
-    def snap(df: org.apache.spark.sql.DataFrame) = df
-      .select("doc_id", "patch_id", "sum_r", "sum_g", "sum_b",
-        "patch_fp", "roundtrip_ok")
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4), r.getLong(5), r.getBoolean(6)))
-      .sortBy(t => (t._1, t._2))
-    val streamed = snap(spark.table("pf_out"))
-    val batch = snap(StreamingDedup.imageFeatureStage(
-      spark.read.schema(docSchema).parquet(dir), "text", "doc_id",
-      "patchify"))
+    val (streamed, batch) = streamAndBatch(
+        docs(1L -> "retail units sold per store and week in region nine"),
+        docs(2L -> ("zq" * 400)))(
+      graft.llm.Multimodal.patchifyPipeline(_, "text", "doc_id")
+        .select("doc_id", "patch_id", "sum_r", "sum_g", "sum_b",
+          "patch_fp", "roundtrip_ok"))(
+      r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+        r.getLong(4), r.getLong(5), r.getBoolean(6)))
     assert(streamed.length === 8) // 2 docs x 4 patches
-    assert(streamed.toSeq === batch.toSeq)
+    assert(streamed === batch)
   }
 
   test("streaming augmentation stage equals the batch operator " +
       "across micro-batches; hash gates make it retry-safe") {
-    import graft.streaming.StreamingDedup
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    val dir = java.nio.file.Files.createTempDirectory("aug_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("aug_ck").toString
-    def rows(docs: (Long, String)*): Unit =
-      docs.toSeq.toDF("doc_id", "text")
-        .write.mode("append").parquet(dir)
-    rows((1L, "retail units sold per store and week in region nine"),
-      (2L, "a b c d e f g h i j k l m n o p"))
-    val stream = spark.readStream.schema(docSchema).parquet(dir)
-    val q = StreamingDedup.augmentStage(stream, "text", "doc_id")
-      .writeStream.format("memory").queryName("aug_out")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    q.processAllAvailable()
-    rows((3L, "late arrival gets the same deterministic gates"))
-    q.processAllAvailable()
-    q.stop()
-    val cols = Seq("doc_id", "aug_text", "n_aug", "n_dropped")
-    val streamed = spark.table("aug_out")
-      .select(cols.head, cols.tail: _*).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2),
-        r.getLong(3))).sortBy(_._1)
-    val batch = graft.llm.TextAnalysis.augmentTokens(
-      spark.read.schema(docSchema).parquet(dir), "text", "doc_id")
-      .select(cols.head, cols.tail: _*).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2),
-        r.getLong(3))).sortBy(_._1)
-    assert(streamed.map(_._1).toSeq === Seq(1L, 2L, 3L))
-    assert(streamed.toSeq === batch.toSeq)
+    val (streamed, batch) = streamAndBatch(
+        docs(1L -> "retail units sold per store and week in region nine",
+          2L -> "a b c d e f g h i j k l m n o p"),
+        docs(3L -> "late arrival gets the same deterministic gates"))(
+      graft.llm.TextAnalysis.augmentTokens(_, "text", "doc_id")
+        .select("doc_id", "aug_text", "n_aug", "n_dropped"))(
+      r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
+    assert(streamed.map(_._1) === Seq(1L, 2L, 3L))
+    assert(streamed === batch)
   }
 
   test("streaming repetition stage equals the batch signals; " +
       "row-local and stateless") {
-    import graft.streaming.StreamingDedup
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    val dir = java.nio.file.Files.createTempDirectory("rep_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("rep_ck").toString
-    def rows(docs: (Long, String)*): Unit =
-      docs.toSeq.toDF("doc_id", "text")
-        .write.mode("append").parquet(dir)
-    rows((1L, "x y\nx y\nz"), (2L, "ab ab ab cd"))
-    val stream = spark.readStream.schema(docSchema).parquet(dir)
-    val q = StreamingDedup.repetitionStage(stream, "text")
-      .writeStream.format("memory").queryName("rep_out")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    q.processAllAvailable()
-    rows((3L, "one two\none two\none two"))
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("rep_out")
+    import graft.llm.TextAnalysis
+    val first = docs(1L -> "x y\nx y\nz", 2L -> "ab ab ab cd")
+    val late = docs(3L -> "one two\none two\none two")
+    val (streamed, batch) = streamAndBatch(first, late)(
+      TextAnalysis.withDocRepetition(_, "text")
+        .select("doc_id", "dup_line_ppm", "top2_ppm"))(
+      r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    assert(streamed.map(_._1) === Seq(1L, 2L, 3L))
+    assert(streamed === batch)
+    // parity with the batch explode form over the same docs
+    assert(streamed === TextAnalysis.docRepetition(first.union(late),
+        "text", "doc_id")
       .select("doc_id", "dup_line_ppm", "top2_ppm").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
-    assert(streamed.map(_._1).toSeq === Seq(1L, 2L, 3L))
-    // batch parity over the same files
-    val batch = graft.llm.TextAnalysis.docRepetition(
-      spark.read.schema(docSchema).parquet(dir), "text", "doc_id")
-      .select("doc_id", "dup_line_ppm", "top2_ppm").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
-    assert(streamed.toSeq === batch.toSeq)
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted.toSeq)
     // doc 3: 3 lines, 2 duplicated -> 666666 ppm
     assert(streamed(2)._2 === 666666L)
+    // the char-bigram entropy signal on the same feed: bit-identical
+    // to its batch read and to the batch explode form
+    val (ent, entBatch) = streamAndBatch(first, late)(
+      TextAnalysis.withCharEntropy(_, "text")
+        .select("doc_id", "n_bigrams", "entropy"))(
+      r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    assert(ent.map(_._1) === Seq(1L, 2L, 3L))
+    assert(ent === entBatch)
+    assert(ent === TextAnalysis.charEntropy(first.union(late), "text",
+        "doc_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq)
   }
 
   test("streaming decontamination stage equals the batch flag; " +
       "join-free and stateless") {
-    import graft.streaming.StreamingDedup
     import graft.llm.Dedup
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    val evalSet = Seq(
-      (100L, "the quick brown fox jumps over the lazy dog tonight"))
-      .toDF("doc_id", "text")
+    val evalSet = docs(
+      100L -> "the quick brown fox jumps over the lazy dog tonight")
     val bloom = Dedup.decontamBloom(evalSet, "text")
-    val dir = java.nio.file.Files.createTempDirectory("dc_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("dc_ck").toString
-    def rows(docs: (Long, String)*): Unit =
-      docs.toSeq.toDF("doc_id", "text")
-        .write.mode("append").parquet(dir)
-    rows((1L, "see the quick brown fox jumps over the lazy dog " +
-      "tonight again"),
-      (2L, "unrelated clean retail content with distinct words"))
-    val stream = spark.readStream.schema(docSchema).parquet(dir)
-    val q = StreamingDedup.decontamStage(stream, "text", bloom)
-      .writeStream.format("memory").queryName("dc_out")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    q.processAllAvailable()
-    rows((3L, "second batch also mentions the quick brown fox jumps " +
-      "over the lazy dog tonight"))
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("dc_out")
-      .select("doc_id", "contaminated").collect()
-      .map(r => (r.getLong(0), r.getBoolean(1))).sortBy(_._1)
-    assert(streamed.map(_._1).toSeq === Seq(1L, 2L, 3L))
-    assert(streamed.map(_._2).toSeq === Seq(true, false, true))
-    val batch = StreamingDedup.decontamStage(
-      spark.read.schema(docSchema).parquet(dir), "text", bloom)
-      .select("doc_id", "contaminated").collect()
-      .map(r => (r.getLong(0), r.getBoolean(1))).sortBy(_._1)
-    assert(streamed.toSeq === batch.toSeq)
+    val (streamed, batch) = streamAndBatch(
+        docs(1L -> ("see the quick brown fox jumps over the lazy dog " +
+          "tonight again"),
+          2L -> "unrelated clean retail content with distinct words"),
+        docs(3L -> ("second batch also mentions the quick brown fox " +
+          "jumps over the lazy dog tonight")))(
+      Dedup.withContaminationFlag(_, "text", bloom)
+        .select("doc_id", "contaminated"))(
+      r => (r.getLong(0), r.getBoolean(1)))
+    assert(streamed.map(_._1) === Seq(1L, 2L, 3L))
+    assert(streamed.map(_._2) === Seq(true, false, true))
+    assert(streamed === batch)
   }
 
   test("streaming DSIR score stage equals the batch fit; join-free " +
       "and stateless") {
-    import graft.streaming.StreamingDedup
     import graft.llm.TextAnalysis
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType)))
     // fit offline on a labeled reference corpus...
     val ref = Seq(
       (101L, "t", "retail units sold per store and week"),
@@ -777,33 +607,17 @@ class StreamingSpec extends AnyFunSuite {
     val model = TextAnalysis.dsirFit(ref, "text", "doc_id",
       "source", "t")
     // ...then score an UNLABELED live feed with the literal model
-    val dir = java.nio.file.Files.createTempDirectory("ds_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("ds_ck").toString
-    def rows(docs: (Long, String)*): Unit =
-      docs.toSeq.toDF("doc_id", "text")
-        .write.mode("append").parquet(dir)
-    rows((1L, "retail units sold per store"),
-      (2L, "   "), // zero content tokens -> dropped
-      (3L, "unrelated vocabulary here"))
-    val stream = spark.readStream.schema(docSchema).parquet(dir)
-    val q = StreamingDedup.dsirScoreStage(stream, "text", model)
-      .writeStream.format("memory").queryName("ds_out")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    q.processAllAvailable()
-    rows((4L, "second micro batch with more retail units text"))
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("ds_out")
-      .select("doc_id", "dsir_score").collect()
-      .map(r => (r.getLong(0), r.getDouble(1))).sortBy(_._1)
-    assert(streamed.map(_._1).toSeq === Seq(1L, 3L, 4L))
+    val (streamed, batch) = streamAndBatch(
+        docs(1L -> "retail units sold per store",
+          2L -> "   ", // zero content tokens -> dropped
+          3L -> "unrelated vocabulary here"),
+        docs(4L -> "second micro batch with more retail units text"))(
+      TextAnalysis.withDsirScore(_, "text", model)
+        .select("doc_id", "dsir_score"))(
+      r => (r.getLong(0), r.getDouble(1)))
+    assert(streamed.map(_._1) === Seq(1L, 3L, 4L))
     // batch parity over the same files, same literal model
-    val batch = StreamingDedup.dsirScoreStage(
-      spark.read.schema(docSchema).parquet(dir), "text", model)
-      .select("doc_id", "dsir_score").collect()
-      .map(r => (r.getLong(0), r.getDouble(1))).sortBy(_._1)
-    assert(streamed.toSeq === batch.toSeq)
+    assert(streamed === batch)
     // target-typical feed doc outscores the raw-typical one
     val s = streamed.toMap
     assert(s(1L) > s(3L))
@@ -811,45 +625,22 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming BM25 score stage equals the batch apply; " +
       "join-free and stateless") {
-    import graft.streaming.StreamingDedup
     import graft.llm.TextAnalysis
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    val ref = Seq(
-      (101L, "alpha alpha beta gamma words"),
-      (102L, "alpha beta beta beta words"),
-      (103L, "gamma delta epsilon zeta words"))
-      .toDF("doc_id", "text")
+    val ref = docs(
+      101L -> "alpha alpha beta gamma words",
+      102L -> "alpha beta beta beta words",
+      103L -> "gamma delta epsilon zeta words")
     val model = TextAnalysis.bm25Fit(ref, "text")
-    val dir = java.nio.file.Files.createTempDirectory("bm_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("bm_ck").toString
-    def rows(docs: (Long, String)*): Unit =
-      docs.toSeq.toDF("doc_id", "text")
-        .write.mode("append").parquet(dir)
-    rows((1L, "alpha beta fresh words"), (2L, ""),
-      (3L, "no query terms at all"))
-    val stream = spark.readStream.schema(docSchema).parquet(dir)
-    val q = StreamingDedup.bm25ScoreStage(stream, "text", model)
-      .writeStream.format("memory").queryName("bm_out")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    q.processAllAvailable()
-    rows((4L, "second batch alpha alpha alpha"))
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("bm_out")
-      .select("doc_id", "bm25_micro", "bm25_hits").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      .sortBy(_._1)
+    val (streamed, batch) = streamAndBatch(
+        docs(1L -> "alpha beta fresh words", 2L -> "",
+          3L -> "no query terms at all"),
+        docs(4L -> "second batch alpha alpha alpha"))(
+      TextAnalysis.withBm25Score(_, "text", model)
+        .select("doc_id", "bm25_micro", "bm25_hits"))(
+      r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     // stateless stage: every row rides through, empty text included
-    assert(streamed.map(_._1).toSeq === Seq(1L, 2L, 3L, 4L))
-    val batch = StreamingDedup.bm25ScoreStage(
-      spark.read.schema(docSchema).parquet(dir), "text", model)
-      .select("doc_id", "bm25_micro", "bm25_hits").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-      .sortBy(_._1)
-    assert(streamed.toSeq === batch.toSeq)
+    assert(streamed.map(_._1) === Seq(1L, 2L, 3L, 4L))
+    assert(streamed === batch)
     val s = streamed.map(t => t._1 -> ((t._2, t._3))).toMap
     assert(s(2L) === ((0L, 0L)) && s(3L) === ((0L, 0L)))
     assert(s(4L)._1 > s(1L)._1) // tf saturation still orders
@@ -914,11 +705,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming license gate: stateless verdicts with batch bit " +
       "parity") {
-    import graft.streaming.StreamingDedup
     import graft.llm.TextAnalysis
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType)))
     val markers = Seq(
       "mit" -> "permission is hereby granted",
       "gpl" -> "gnu general public license")
@@ -927,28 +714,17 @@ class StreamingSpec extends AnyFunSuite {
       (2L, "plain document, no license"),
       (3L, "dual permission is hereby granted and " +
         "gnu general public license"))
-    val dir = java.nio.file.Files.createTempDirectory("lic_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("lic_ck").toString
-    corpus.toDF("doc_id", "text").write.mode("append").parquet(dir)
-    val stream = spark.readStream.schema(docSchema).parquet(dir)
-    val q = StreamingDedup.licenseScanStage(stream, "text", "doc_id",
-        markers)
-      .writeStream.format("memory").queryName("lic_out")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    q.processAllAvailable()
-    q.stop()
     def tup(r: org.apache.spark.sql.Row) =
       (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getBoolean(5))
-    val streamed = spark.table("lic_out").collect().map(tup)
-      .sortBy(_._1)
-    assert(streamed.map(t => (t._1, t._2, t._6)).toSeq === Seq(
+    val (streamed, batch) = streamAndBatch(docs(corpus.take(2): _*),
+        docs(corpus.drop(2): _*))(
+      TextAnalysis.licenseScan(_, "text", "doc_id", markers))(tup)
+    assert(streamed.map(t => (t._1, t._2, t._6)) === Seq(
       (1L, "mit", false), (2L, "unknown", false), (3L, "gpl", true)))
-    val batch = TextAnalysis.licenseScan(
-        corpus.toDF("doc_id", "text"), "text", "doc_id", markers)
-      .collect().map(tup).sortBy(_._1)
-    assert(streamed.toSeq === batch.toSeq)
+    assert(streamed === batch)
+    assert(streamed === TextAnalysis.licenseScan(docs(corpus: _*),
+      "text", "doc_id", markers).collect().map(tup).sorted.toSeq)
   }
 
   test("streaming release gate: the three row-local verdicts match " +
@@ -1258,7 +1034,7 @@ class StreamingSpec extends AnyFunSuite {
     write(1L, 2L)
     val stream = spark.readStream.schema(docSchema).parquet(dir)
     val q = StreamingDedup.spanScrubDecisions(
-        StreamingDedup.spanGramStage(stream, "text", "doc_id", n = 5))
+        Dedup.spanGrams(stream, "text", "doc_id", n = 5))
       .writeStream.format("memory").queryName("span_out")
       .option("checkpointLocation", ckpt)
       .outputMode("append").start()
@@ -1390,49 +1166,29 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming langId and urlParse stages equal their batch " +
       "forms; stateless, every row rides through") {
-    import graft.streaming.StreamingDedup
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType),
-      StructField("url", StringType)))
-    val dir = java.nio.file.Files.createTempDirectory("li_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("li_ck").toString
-    def rows(docs: (Long, String, String)*): Unit =
-      docs.toSeq.toDF("doc_id", "text", "url")
-        .write.mode("append").parquet(dir)
-    rows(
-      (1L, "where did you put the keys to the old car",
-        "https://a.b.Example.co.uk:8080/p"),
-      (2L, "los estudiantes estaban leyendo en el jardin",
-        "http://user:pw@www.Site.COM/x"))
-    val stream = spark.readStream.schema(docSchema).parquet(dir)
-    val staged = StreamingDedup.urlParseStage(
-      StreamingDedup.langIdStage(stream, "text"), "url")
-    val q = staged.writeStream.format("memory").queryName("li_out")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    q.processAllAvailable()
-    rows((3L, "les oiseaux chantent dans le jardin", "ftp://10.0.0.1:21/f"))
-    q.processAllAvailable()
-    q.stop()
-    def tup(r: org.apache.spark.sql.Row) =
-      (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3),
-        r.getBoolean(4), r.getString(5))
+    def pages(rs: (Long, String, String)*) = rs.toDF("doc_id", "text", "url")
     val cols = Seq("doc_id", "pred_lang", "host", "port", "is_ip",
       "registered_domain")
-    val streamed = spark.table("li_out")
-      .selectExpr(cols: _*).collect().map(tup).sortBy(_._1)
-    assert(streamed.map(t => (t._1, t._2)).toSeq ===
+    val (streamed, batch) = streamAndBatch(
+        pages(
+          (1L, "where did you put the keys to the old car",
+            "https://a.b.Example.co.uk:8080/p"),
+          (2L, "los estudiantes estaban leyendo en el jardin",
+            "http://user:pw@www.Site.COM/x")),
+        pages((3L, "les oiseaux chantent dans le jardin",
+          "ftp://10.0.0.1:21/f")))(
+      df => graft.llm.UrlOps.withUrlParts(
+        graft.llm.TextAnalysis.withLangId(df, "text"), "url")
+        .selectExpr(cols: _*))(
+      r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3),
+        r.getBoolean(4), r.getString(5)))
+    assert(streamed.map(t => (t._1, t._2)) ===
       Seq((1L, "en"), (2L, "es"), (3L, "fr")))
     assert(streamed(0)._3 === "a.b.example.co.uk")
     assert(streamed(0)._4 === 8080L)
     assert(streamed(0)._6 === "example.co.uk")
     assert(streamed(2)._5 === true)
-    val batch = StreamingDedup.urlParseStage(
-        StreamingDedup.langIdStage(
-          spark.read.schema(docSchema).parquet(dir), "text"), "url")
-      .selectExpr(cols: _*).collect().map(tup).sortBy(_._1)
-    assert(streamed.toSeq === batch.toSeq)
+    assert(streamed === batch)
   }
 
   test("streaming hybrid retrieval: fitted score stage + stateful " +
@@ -1502,80 +1258,43 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming urlCanon and shard stages equal their batch forms; " +
       "stateless, two canon variants collide on the stream too") {
-    import graft.streaming.StreamingDedup
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType),
-      StructField("url", StringType)))
-    val dir = java.nio.file.Files.createTempDirectory("uc_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("uc_ck").toString
-    def rows(docs: (Long, String, String)*): Unit =
-      docs.toSeq.toDF("doc_id", "text", "url")
-        .write.mode("append").parquet(dir)
-    rows(
-      (1L, "some body text for doc one",
-        "https://WWW.Shop.Com:443/p/1/?utm_source=x&id=1#f"),
-      (2L, "a different and rather longer body text for doc two",
-        "https://www.shop.com/p/1?id=1"))
-    val stream = spark.readStream.schema(docSchema).parquet(dir)
-    val staged = StreamingDedup.shardStage(
-      StreamingDedup.urlCanonStage(stream, "url"), "text", "doc_id",
-      nShards = 8)
-    val q = staged.writeStream.format("memory").queryName("uc_out")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    q.processAllAvailable()
-    rows((3L, "third doc body", "http://other.org:8080/x?b=2&a=1&gclid=g"))
-    q.processAllAvailable()
-    q.stop()
+    def pages(rs: (Long, String, String)*) = rs.toDF("doc_id", "text", "url")
     val cols = Seq("doc_id", "canon_url", "n_params_dropped", "shard")
-    def tup(r: org.apache.spark.sql.Row) =
-      (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))
-    val streamed = spark.table("uc_out")
-      .selectExpr(cols: _*).collect().map(tup).sortBy(_._1)
+    val (streamed, batch) = streamAndBatch(
+        pages(
+          (1L, "some body text for doc one",
+            "https://WWW.Shop.Com:443/p/1/?utm_source=x&id=1#f"),
+          (2L, "a different and rather longer body text for doc two",
+            "https://www.shop.com/p/1?id=1")),
+        pages((3L, "third doc body",
+          "http://other.org:8080/x?b=2&a=1&gclid=g")))(
+      df => graft.llm.TextAnalysis.withShard(
+        graft.llm.UrlOps.canonicalizeUrl(df, "url"), "text", "doc_id",
+        nShards = 8).selectExpr(cols: _*))(
+      r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
     // the two variants of one resource collide on the live feed
     assert(streamed(0)._2 === "https://www.shop.com/p/1?id=1")
     assert(streamed(0)._2 === streamed(1)._2)
     assert(streamed(0)._3 === 1L && streamed(1)._3 === 0L)
     // non-default port kept, params sorted, tracking key dropped
     assert(streamed(2)._2 === "http://other.org:8080/x?a=1&b=2")
-    val batch = StreamingDedup.shardStage(
-        StreamingDedup.urlCanonStage(
-          spark.read.schema(docSchema).parquet(dir), "url"),
-        "text", "doc_id", nShards = 8)
-      .selectExpr(cols: _*).collect().map(tup).sortBy(_._1)
-    assert(streamed.toSeq === batch.toSeq)
+    assert(streamed === batch)
   }
 
   test("anchorStage equals batch anchorPairs; stateless, one row " +
       "per tag") {
-    import graft.streaming.StreamingDedup
-    val docSchema = StructType(Seq(StructField("text", StringType)))
-    val dir = java.nio.file.Files.createTempDirectory("an_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("an_ck").toString
-    def rows(texts: String*): Unit =
-      texts.toSeq.toDF("text").write.mode("append").parquet(dir)
-    rows("""x <a href="https://a.b.com/1">First Link</a> y
-           <a href="http://c.co.uk/2">second</a>""")
-    val stream = spark.readStream.schema(docSchema).parquet(dir)
-    val q = StreamingDedup.anchorStage(stream, "text")
-      .writeStream.format("memory").queryName("an_out")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    q.processAllAvailable()
-    rows("""<a href="https://z.b.com/3">first link</a> plain""")
-    q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("an_out").collect()
-      .map(r => (r.getString(0), r.getString(1))).sorted
+    val (streamed, batch) = streamAndBatch(
+        Seq("""x <a href="https://a.b.com/1">First Link</a> y
+           <a href="http://c.co.uk/2">second</a>""").toDF("text"),
+        Seq("""<a href="https://z.b.com/3">first link</a> plain""")
+          .toDF("text"))(
+      graft.llm.UrlOps.anchorPairs(_, "text"))(
+      r => (r.getString(0), r.getString(1)))
     // c.co.uk sits under the co.uk multi-part suffix -> the
     // registrable domain keeps three labels
-    assert(streamed.toSeq === Seq(("b.com", "first link"),
+    assert(streamed === Seq(("b.com", "first link"),
       ("b.com", "first link"), ("c.co.uk", "second")))
-    val batch = graft.llm.UrlOps.anchorPairs(
-        spark.read.schema(docSchema).parquet(dir), "text")
-      .collect().map(r => (r.getString(0), r.getString(1))).sorted
-    assert(streamed.toSeq === batch.toSeq)
+    assert(streamed === batch)
   }
 
   test("urlCanonStage feeding watermark dedup keyed on canon_url " +
@@ -1597,7 +1316,7 @@ class StreamingSpec extends AnyFunSuite {
       (2L, "https://other.org/x", 2))
     val stream = spark.readStream.schema(docSchema).parquet(dir)
     val staged = StreamingDedup.dedupByContent(
-      StreamingDedup.urlCanonStage(stream, "url"),
+      graft.llm.UrlOps.canonicalizeUrl(stream, "url"),
       "canon_url", "ts")
     val q = staged.writeStream.format("memory").queryName("cd_out")
       .option("checkpointLocation", ckpt)
@@ -1666,81 +1385,37 @@ class StreamingSpec extends AnyFunSuite {
 
   test("mainContentStage equals batch mainContent across " +
       "micro-batches; chrome stripped before downstream stages") {
-    import graft.streaming.StreamingDedup
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("page", StringType)))
-    val dir = java.nio.file.Files.createTempDirectory("mc_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("mc_ck").toString
-    def page(i: Long) =
+    def pages(ids: Long*) = ids.map(i => (i,
       "<a href=\"/\">home</a> <a href=\"/a\">about us</a> " +
         "<a href=\"/c\">contact</a>\n" +
         s"the long and unique body of crawled document number $i " +
-        "with plenty of prose\n" + "ok"
-    def rows(ids: Long*): Unit =
-      ids.toSeq.map(i => (i, page(i))).toDF("doc_id", "page")
-        .write.mode("append").parquet(dir)
-    rows(1L, 2L)
-    val stream = spark.readStream.schema(docSchema).parquet(dir)
-    val q = StreamingDedup.mainContentStage(stream, "page")
-      .select("doc_id", "n_blocks", "n_kept", "kept_ppm", "main_text")
-      .writeStream.format("memory").queryName("mc_out")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    q.processAllAvailable()
-    rows(3L)
-    q.processAllAvailable()
-    q.stop()
-    def tup(r: org.apache.spark.sql.Row) =
-      (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getString(4))
-    val streamed = spark.table("mc_out").collect().map(tup).sortBy(_._1)
+        "with plenty of prose\n" + "ok")).toDF("doc_id", "page")
+    val (streamed, batch) = streamAndBatch(pages(1L, 2L), pages(3L))(
+      graft.llm.TextAnalysis.mainContent(_, "page")
+        .select("doc_id", "n_blocks", "n_kept", "kept_ppm", "main_text"))(
+      r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+        r.getString(4)))
     assert(streamed.length === 3)
     // chrome and the sub-minimum fragment are gone on the live feed
     assert(streamed.forall { case (_, nb, nk, _, main) =>
       nb === 3L && nk === 1L && !main.contains("home") &&
         main.startsWith("the long and unique body") })
-    val batch = graft.llm.TextAnalysis.mainContent(
-        spark.read.schema(docSchema).parquet(dir), "page")
-      .select("doc_id", "n_blocks", "n_kept", "kept_ppm", "main_text")
-      .collect().map(tup).sortBy(_._1)
-    assert(streamed.toSeq === batch.toSeq)
+    assert(streamed === batch)
   }
 
   test("normalizeStage equals batch normalizeText across " +
       "micro-batches; composed/decomposed spellings collide") {
-    import graft.streaming.StreamingDedup
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    val dir = java.nio.file.Files.createTempDirectory("nm_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("nm_ck").toString
-    def rows(rs: (Long, String)*): Unit =
-      rs.toSeq.toDF("doc_id", "text")
-        .write.mode("append").parquet(dir)
-    rows(1L -> "Café  DU\tMONDE", 2L -> "café du monde")
-    val stream = spark.readStream.schema(docSchema).parquet(dir)
-    val q = StreamingDedup.normalizeStage(stream, "text")
-      .select("doc_id", "norm_text", "norm_changed")
-      .writeStream.format("memory").queryName("nm_out")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    q.processAllAvailable()
-    rows(3L -> "already clean")
-    q.processAllAvailable()
-    q.stop()
-    def tup(r: org.apache.spark.sql.Row) =
-      (r.getLong(0), r.getString(1), r.getBoolean(2))
-    val streamed = spark.table("nm_out").collect().map(tup).sortBy(_._1)
+    val (streamed, batch) = streamAndBatch(
+        docs(1L -> "Café  DU\tMONDE", 2L -> "café du monde"),
+        docs(3L -> "already clean"))(
+      graft.llm.TextAnalysis.normalizeText(_, "text")
+        .select("doc_id", "norm_text", "norm_changed"))(
+      r => (r.getLong(0), r.getString(1), r.getBoolean(2)))
     assert(streamed.length === 3)
     // the decomposed spelling folded onto the composed one live
     assert(streamed(0)._2 === streamed(1)._2)
     assert(streamed(0)._3 && !streamed(1)._3 && !streamed(2)._3)
-    val batch = graft.llm.TextAnalysis.normalizeText(
-        spark.read.schema(docSchema).parquet(dir), "text")
-      .select("doc_id", "norm_text", "norm_changed")
-      .collect().map(tup).sortBy(_._1)
-    assert(streamed.toSeq === batch.toSeq)
+    assert(streamed === batch)
   }
 
   test("unigramStage equals batch unigramApply across micro-batches " +
@@ -1825,201 +1500,95 @@ class StreamingSpec extends AnyFunSuite {
 
   test("robotsStage equals batch robotsGate across micro-batches; " +
       "stream-static policy join, zero state") {
-    import graft.streaming.StreamingDedup
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("url", StringType)))
-    val dir = java.nio.file.Files.createTempDirectory("rb_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("rb_ck").toString
     val rules = Seq(
       ("ex.com", false, "/private/"),
       ("ex.com", true, "/private/ok/"))
       .toDF("host", "allow", "prefix")
-    def rows(docs: (Long, String)*): Unit =
-      docs.toSeq.toDF("doc_id", "url")
-        .write.mode("append").parquet(dir)
-    rows((1L, "https://ex.com/private/a"),
-      (2L, "https://ex.com/private/ok/x"))
-    val stream = spark.readStream.schema(docSchema).parquet(dir)
-    val q = StreamingDedup.robotsStage(stream, "url", rules)
-      .select("doc_id", "allowed", "matched_rule", "matched_len")
-      .writeStream.format("memory").queryName("rb_out")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    q.processAllAvailable()
-    rows((3L, "https://other.net/private/a"))
-    q.processAllAvailable()
-    q.stop()
-    def tup(r: org.apache.spark.sql.Row) =
-      (r.getLong(0), r.getBoolean(1), r.getString(2), r.getLong(3))
-    val streamed = spark.table("rb_out").collect().map(tup).sortBy(_._1)
-    assert(streamed.toSeq === Seq(
+    def urls(rs: (Long, String)*) = rs.toDF("doc_id", "url")
+    val (streamed, batch) = streamAndBatch(
+        urls((1L, "https://ex.com/private/a"),
+          (2L, "https://ex.com/private/ok/x")),
+        urls((3L, "https://other.net/private/a")))(
+      graft.llm.UrlOps.robotsGate(_, "url", rules)
+        .select("doc_id", "allowed", "matched_rule", "matched_len"))(
+      r => (r.getLong(0), r.getBoolean(1), r.getString(2), r.getLong(3)))
+    assert(streamed === Seq(
       (1L, false, "/private/", 9L),
       (2L, true, "/private/ok/", 12L),
       (3L, true, "", 0L)))
-    val batch = graft.llm.UrlOps.robotsGate(
-        spark.read.schema(docSchema).parquet(dir), "url", rules)
-      .select("doc_id", "allowed", "matched_rule", "matched_len")
-      .collect().map(tup).sortBy(_._1)
-    assert(streamed.toSeq === batch.toSeq)
+    assert(streamed === batch)
   }
 
   test("streaming FIM stage equals the batch split; a late arrival " +
       "gets the same deterministic cuts") {
-    import graft.streaming.StreamingDedup
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    val dir = java.nio.file.Files.createTempDirectory("fim_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("fim_ck").toString
-    def rows(docs: (Long, String)*): Unit =
-      docs.toSeq.toDF("doc_id", "text")
-        .write.mode("append").parquet(dir)
-    rows((1L, "the quick brown fox jumps over the lazy dog tonight"),
-      (2L, "short doc"))
-    val stream = spark.readStream.schema(docSchema).parquet(dir)
-    val q = StreamingDedup.fimStage(stream, "text", "doc_id")
-      .writeStream.format("memory").queryName("fim_out")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    q.processAllAvailable()
-    rows((3L, "a late document must split exactly like the batch " +
-      "pipeline would split it"))
-    q.processAllAvailable()
-    q.stop()
-    val cols = Seq("doc_id", "fim_mode", "prefix", "middle", "suffix")
-    def tup(r: org.apache.spark.sql.Row) =
-      (r.getLong(0), r.getString(1), r.getString(2), r.getString(3),
-        r.getString(4))
-    val streamed = spark.table("fim_out")
-      .select(cols.head, cols.tail: _*).collect().map(tup).sortBy(_._1)
-    assert(streamed.map(_._1).toSeq === Seq(1L, 2L, 3L))
+    val (streamed, batch) = streamAndBatch(
+        docs(1L -> "the quick brown fox jumps over the lazy dog tonight",
+          2L -> "short doc"),
+        docs(3L -> ("a late document must split exactly like the batch " +
+          "pipeline would split it")))(
+      graft.llm.TextAnalysis.fimSplit(_, "text", "doc_id")
+        .select("doc_id", "fim_mode", "prefix", "middle", "suffix"))(
+      r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3),
+        r.getString(4)))
+    assert(streamed.map(_._1) === Seq(1L, 2L, 3L))
     // non-raw rows reassemble; the short doc passes through raw
     assert(streamed(0)._3 + streamed(0)._4 + streamed(0)._5 ===
       "the quick brown fox jumps over the lazy dog tonight")
     assert((streamed(1)._2, streamed(1)._3) === (("raw", "short doc")))
-    val batch = graft.llm.TextAnalysis.fimSplit(
-        spark.read.schema(docSchema).parquet(dir), "text", "doc_id")
-      .select(cols.head, cols.tail: _*).collect().map(tup).sortBy(_._1)
-    assert(streamed.toSeq === batch.toSeq)
+    assert(streamed === batch)
   }
 
   test("streaming mojibake stage equals the batch repair; a late " +
       "arrival gets the identical fix count") {
-    import graft.streaming.StreamingDedup
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    val dir = java.nio.file.Files.createTempDirectory("mj_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("mj_ck").toString
-    def rows(docs: (Long, String)*): Unit =
-      docs.toSeq.toDF("doc_id", "text")
-        .write.mode("append").parquet(dir)
-    rows((1L, "cafÃ© itâ€™s fine"), (2L, "clean"))
-    val stream = spark.readStream.schema(docSchema).parquet(dir)
-    val q = StreamingDedup.mojibakeStage(stream, "text")
-      .writeStream.format("memory").queryName("mj_out")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    q.processAllAvailable()
-    rows((3L, "late â€œquotedâ€¦ Ã±"))
-    q.processAllAvailable()
-    q.stop()
-    def tup(r: org.apache.spark.sql.Row) =
-      (r.getLong(0), r.getString(1), r.getLong(2))
-    val cols = Seq("doc_id", "fixed_text", "n_fixes")
-    val streamed = spark.table("mj_out")
-      .select(cols.head, cols.tail: _*).collect().map(tup).sortBy(_._1)
-    assert(streamed.toSeq === Seq(
+    val (streamed, batch) = streamAndBatch(
+        docs(1L -> "cafÃ© itâ€™s fine", 2L -> "clean"),
+        docs(3L -> "late â€œquotedâ€¦ Ã±"))(
+      graft.llm.TextAnalysis.mojibakeFix(_, "text")
+        .select("doc_id", "fixed_text", "n_fixes"))(
+      r => (r.getLong(0), r.getString(1), r.getLong(2)))
+    assert(streamed === Seq(
       (1L, "café it’s fine", 2L),
       (2L, "clean", 0L),
       (3L, "late “quoted… ñ", 3L)))
-    val batch = graft.llm.TextAnalysis.mojibakeFix(
-        spark.read.schema(docSchema).parquet(dir), "text")
-      .select(cols.head, cols.tail: _*).collect().map(tup).sortBy(_._1)
-    assert(streamed.toSeq === batch.toSeq)
+    assert(streamed === batch)
   }
 
   test("streaming burstiness stage equals the batch signals on a " +
       "late arrival") {
-    import graft.streaming.StreamingDedup
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    val dir = java.nio.file.Files.createTempDirectory("ss_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("ss_ck").toString
-    def rows(docs: (Long, String)*): Unit =
-      docs.toSeq.toDF("doc_id", "text")
-        .write.mode("append").parquet(dir)
-    rows((1L, "one two three. four five six."), (2L, "no breaks"))
-    val stream = spark.readStream.schema(docSchema).parquet(dir)
-    val q = StreamingDedup.syntheticStage(stream, "text")
-      .writeStream.format("memory").queryName("ss_out")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    q.processAllAvailable()
-    rows((3L, "a b c d e f. g h."))
-    q.processAllAvailable()
-    q.stop()
-    val cols = Seq("doc_id", "n_sent", "sum_len", "sum_len2",
-      "burstiness_ppm")
-    def tup(r: org.apache.spark.sql.Row) =
-      (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getLong(4))
-    val streamed = spark.table("ss_out")
-      .select(cols.head, cols.tail: _*).collect().map(tup).sortBy(_._1)
-    assert(streamed.toSeq === Seq(
+    val (streamed, batch) = streamAndBatch(
+        docs(1L -> "one two three. four five six.", 2L -> "no breaks"),
+        docs(3L -> "a b c d e f. g h."))(
+      graft.llm.TextAnalysis.syntheticSignals(_, "text")
+        .select("doc_id", "n_sent", "sum_len", "sum_len2",
+          "burstiness_ppm"))(
+      r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+        r.getLong(4)))
+    assert(streamed === Seq(
       (1L, 2L, 6L, 18L, 0L),
       (2L, 1L, 2L, 4L, 0L),
       (3L, 2L, 8L, 40L, 250000L)))
-    val batch = graft.llm.TextAnalysis.syntheticSignals(
-        spark.read.schema(docSchema).parquet(dir), "text")
-      .select(cols.head, cols.tail: _*).collect().map(tup).sortBy(_._1)
-    assert(streamed.toSeq === batch.toSeq)
+    assert(streamed === batch)
   }
 
   test("streaming homoglyph-fold stage equals the batch fold; an " +
       "obfuscated late duplicate hashes onto its original") {
-    import graft.streaming.StreamingDedup
-    val docSchema = StructType(Seq(
-      StructField("doc_id", LongType),
-      StructField("text", StringType)))
-    val dir = java.nio.file.Files.createTempDirectory("cf_in").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("cf_ck").toString
-    def rows(docs: (Long, String)*): Unit =
-      docs.toSeq.toDF("doc_id", "text")
-        .write.mode("append").parquet(dir)
-    rows((1L, "buy cheap pills"), (2L, "plain"))
-    val stream = spark.readStream.schema(docSchema).parquet(dir)
-    val q = StreamingDedup.confusableStage(stream, "text")
-      .select(col("doc_id"), col("folded_text"), col("n_folded"),
-        graft.llm.TextAnalysis.fingerprintExpr("folded_text")
-          .as("fp"))
-      .writeStream.format("memory").queryName("cf_out")
-      .option("checkpointLocation", ckpt)
-      .outputMode("append").start()
-    q.processAllAvailable()
-    rows((3L, "buy chеap pіlls")) // Cyrillic е/і — the late spam twin
-    q.processAllAvailable()
-    q.stop()
-    def tup(r: org.apache.spark.sql.Row) =
-      (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))
-    val streamed = spark.table("cf_out").collect().map(tup)
-      .sortBy(_._1)
-    assert(streamed.map(t => (t._1, t._2, t._3)).toSeq === Seq(
+    import graft.llm.TextAnalysis
+    // the late arrival is the spam twin with Cyrillic е/і
+    val (streamed, batch) = streamAndBatch(
+        docs(1L -> "buy cheap pills", 2L -> "plain"),
+        docs(3L -> "buy chеap pіlls"))(
+      TextAnalysis.confusableFold(_, "text")
+        .select(col("doc_id"), col("folded_text"), col("n_folded"),
+          TextAnalysis.fingerprintExpr("folded_text").as("fp")))(
+      r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
+    assert(streamed.map(t => (t._1, t._2, t._3)) === Seq(
       (1L, "buy cheap pills", 0L),
       (2L, "plain", 0L),
       (3L, "buy cheap pills", 2L)))
     // the folded fingerprints collide exactly as the batch dedup
     // would see them
     assert(streamed(0)._4 === streamed(2)._4)
-    val batch = StreamingDedup.confusableStage(
-        spark.read.schema(docSchema).parquet(dir), "text")
-      .select(col("doc_id"), col("folded_text"), col("n_folded"),
-        graft.llm.TextAnalysis.fingerprintExpr("folded_text")
-          .as("fp"))
-      .collect().map(tup).sortBy(_._1)
-    assert(streamed.toSeq === batch.toSeq)
+    assert(streamed === batch)
   }
 
   test("streaming position-bias counters merge across micro-batches " +
